@@ -120,6 +120,12 @@ object ShortestPath {
         WHERE p.dist + e.w <= $bound)
       SELECT node, MIN(dist) AS dist FROM paths GROUP BY node ORDER BY node"""
 
+  /** [[sssp]] solves on the driver up to this many edges: 1M edges ≈
+    * 24 MB of (long,long,double) rows — comfortably inside any driver
+    * heap while still covering every "small graph" case; beyond it the
+    * per-superstep work amortizes Spark's fixed job cost. */
+  val LocalEdges = 1000000L
+
   /** Single-source shortest paths. Returns `(node, dist)` for every node
     * reachable from `source`. One row per reached node; unordered (the
     * reference guarantees no order either, README.txt:55-58).
@@ -129,22 +135,17 @@ object ShortestPath {
     * 279), and on Spark each superstep is a fixed multi-job cost — pure
     * driver-loop iteration is latency-bound regardless of cluster size.
     * So when the edge relation fits comfortably in driver memory
-    * (`localCutover`) the solve finishes locally with the same Dijkstra
-    * the oracle uses — the standard cutover every distributed graph
-    * engine makes when the active problem fits on one node. Larger
-    * graphs take [[distributedSssp]], where per-superstep real work
-    * dominates the fixed overhead.
+    * ([[LocalEdges]], via [[graft.core.Hybrid]]) the solve finishes
+    * locally with the same Dijkstra the oracle uses — the standard
+    * cutover every distributed graph engine makes when the active
+    * problem fits on one node. Larger graphs take [[distributedSssp]],
+    * where per-superstep real work dominates the fixed overhead.
     */
-  def sssp(edges: DataFrame, source: Long,
-      // 1M edges ≈ 24 MB of (long,long,double) rows — comfortably inside
-      // any driver heap while still covering every "small graph" case;
-      // beyond it the per-superstep work amortizes Spark's fixed job cost
-      localCutover: Long = 1000000L): DataFrame = {
+  def sssp(edges: DataFrame, source: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col("src"), col("dst"), col("weight"))
-    val m = e.count()
-    if (m <= localCutover) {
+    if (graft.core.Hybrid.local(spark, LocalEdges)(e.count())) {
       val es = e.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       dijkstra(es.toSeq, source).toSeq.toDF("node", "dist")
     } else distributedSssp(e, source)

@@ -31,7 +31,8 @@ import org.apache.spark.storage.StorageLevel
   *    CatalogPlanSweepSpec plans every catalog entry in this mode so its
   *    boundedness witnesses (scans, limits, aggregates below a hinted
   *    broadcast) are audited against the REAL producing subtree instead
-  *    of an opaque LogicalRDD leaf.
+  *    of an opaque LogicalRDD leaf. Which path a hybrid operator takes
+  *    is not a cut decision: that is [[Hybrid]]'s key.
   *
   * Bounded cuts (≤ B-row bucket/offset relations, LIMIT-k shortlists)
   * are free under any strategy; corpus-scaled cuts are the ones the
@@ -55,11 +56,19 @@ object Cuts {
   * lazy cut materialized first (a lazy checkpoint raced from two
   * concurrent jobs can double-compute its subtree). */
 object Par {
-  def run(tasks: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+  import scala.concurrent.{Await, Future}
+  import scala.concurrent.duration.Duration
+  import scala.concurrent.ExecutionContext.Implicits.global
+
+  /** Runs the tasks concurrently; returns their results in task order. */
+  def run[A](tasks: (() => A)*): Seq[A] =
     Await.result(Future.sequence(tasks.map(t => Future(t()))), Duration.Inf)
+
+  /** [[run]] for two tasks of different result types. */
+  def both[A, B](a: => A, b: => B): (A, B) = {
+    val fa = Future(a)
+    val fb = Future(b)
+    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
   }
 }
 

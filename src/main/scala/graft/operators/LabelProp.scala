@@ -33,27 +33,22 @@ object LabelProp {
 
   def all: Seq[QueryDef] = Seq(labelProp, modularity)
 
-  /** Hybrid cutover (r17) — the massLoop/sssp localCutover pattern
-    * applied to LPA: below `spark.graft.graphLocalN` nodes the 5 rounds
+  /** Hybrid cutover (r17; [[graft.core.Hybrid]]) — PageRank's pattern
+    * applied to LPA: up to [[PageRank.LocalNodes]] nodes the 5 rounds
     * run as a driver loop over the collected edge relation (the bench
     * graph is 1000 nodes / ~6 k directed edges; the unrolled
     * distributed plan costs ~2 s of per-stage scheduling + plan-build
     * for milliseconds of work — the measured PageRank decomposition,
     * OPTIMIZATION_r17.md). Integer label encoding is exact, so the two
-    * paths are bit-identical BY CONSTRUCTION; LabelPropHybridSpec pins
-    * them against each other and the DuckDB oracle hashes every label.
-    * `spark.graft.planCuts=none` (the sweep's audit mode) forces the
-    * distributed plan so its shape stays reviewed. */
-  private def useLocal(s: org.apache.spark.sql.SparkSession): Boolean = {
-    val auditing = s.conf.get(graft.core.Cuts.ConfKey, "local") == "none"
-    val localN = s.conf.get(graft.operators.PageRank.LocalNKey, "200000").toLong
-    N <= localN && !auditing
-  }
+    * paths are bit-identical BY CONSTRUCTION; HybridEquivalenceSpec pins
+    * them against each other and the DuckDB oracle hashes every label. */
+  private def useLocal(s: org.apache.spark.sql.SparkSession): Boolean =
+    graft.core.Hybrid.local(s, PageRank.LocalNodes)(N)
 
   /** Directed edge pairs of the shared graph — the exact local
     * generator twin ([[ShortestPath.syntheticEdgesLocal]]; r17 second
     * pass: skips the collect job entirely, same multiset by
-    * construction, LabelPropHybridSpec pins the result). */
+    * construction, HybridEquivalenceSpec pins the result). */
   private def collectedEdges(s: org.apache.spark.sql.SparkSession): Array[(Int, Int)] =
     ShortestPath.syntheticEdgesLocal(N)
 
@@ -152,7 +147,7 @@ object LabelProp {
     (s, _) => if (useLocal(s)) {
       // driver-local twin of the aggregation plan below — all products
       // stay < 2^53, so the DECIMAL(38,0)→DOUBLE casts and this exact
-      // long arithmetic produce identical doubles (LabelPropHybridSpec
+      // long arithmetic produce identical doubles (HybridEquivalenceSpec
       // pins the equality row by row)
       val es = collectedEdges(s)
       val lab = lpaLocal(es)

@@ -45,17 +45,20 @@ object PageRank {
 
   def all: Seq[QueryDef] = Seq(pagerank, ppr, pagerankPlaw)
 
+  /** Graph families (PageRank, LPA, triangles) finish on the driver up
+    * to this many nodes — about 600 k collected edge rows, the SSSP
+    * 1M-edge class ([[graft.core.Hybrid]]). */
+  val LocalNodes = 200000L
+
   /** The shared 5-round mass-propagation loop (r17; VERDICT r16 item 2).
     *
-    * HYBRID, the [[graft.apps.ShortestPath.sssp]] localCutover pattern:
-    * when the whole graph fits comfortably on the driver (n <=
-    * `spark.graft.graphLocalN`, default 200 000 -- about 600 k collected
-    * edge rows, the sssp 1M-edge class), the 5 rounds run as a driver
-    * loop over the collected edge relation. The arithmetic is the
-    * engine's exact scaled BIGINT with truncating division on
+    * HYBRID ([[graft.core.Hybrid]]): when the whole graph fits
+    * comfortably on the driver (n <= [[LocalNodes]]), the 5 rounds run
+    * as a driver loop over the collected edge relation. The arithmetic
+    * is the engine's exact scaled BIGINT with truncating division on
     * non-negative operands, so the local loop is bit-identical to the
-    * distributed plan BY CONSTRUCTION (PageRankHybridSpec pins the two
-    * paths against each other; the DuckDB oracle hashes every rank).
+    * distributed plan BY CONSTRUCTION (HybridEquivalenceSpec pins the
+    * two paths against each other; the DuckDB oracle hashes every rank).
     * Why a cutover at all: the r16 PERF scaling block measured this
     * family FASTER at 8 cores than 32 -- per-round fixed cost, not
     * data, dominates. r17 decomposed that cost on the 1000-node bench
@@ -68,11 +71,10 @@ object PageRank {
     * cutover every distributed graph engine makes, already precedented
     * by sssp's hybrid.
     *
-    * DISTRIBUTED path (n above the cutover, or
-    * `spark.graft.planCuts=none` so CatalogPlanSweepSpec audits the real
-    * plan shape): the lazy unrolled plan, with two r17 improvements that
-    * also hold at 100 TB -- loop/range parallelism derived from the node
-    * count ([[graft.core.Parallelism.graphParts]], conf-capped so
+    * DISTRIBUTED path (n above the bound, or `spark.graft.hybrid=
+    * distributed`): the lazy unrolled plan, with two r17 improvements
+    * that also hold at 100 TB -- loop/range parallelism derived from the
+    * node count ([[graft.core.Parallelism.graphParts]], conf-capped so
     * production-scale graphs keep cluster-wide parallelism), and ONE
     * exchange per round: the zero-row union folds the constant id
     * universe into the mass aggregation (guide 2.4; the old
@@ -83,10 +85,8 @@ object PageRank {
     * `update`/`updateF` map the exact BIGINT contribution sum `cs` (and
     * the node id, for the seeded PPR restart) to the next rank -- the
     * same formula spelled once as a Column and once as a Scala function;
-    * PageRankHybridSpec and the oracle hash gate pin the two against
+    * HybridEquivalenceSpec and the oracle hash gate pin the two against
     * each other. */
-  val LocalNKey = "spark.graft.graphLocalN"
-
   private def massLoop(s: org.apache.spark.sql.SparkSession, n: Long,
       edges: org.apache.spark.sql.DataFrame,
       init: org.apache.spark.sql.Column,
@@ -95,9 +95,7 @@ object PageRank {
       updateF: (Long, Long) => Long,
       edgesLocal: Option[() => Array[(Int, Int)]] = None)
       : org.apache.spark.sql.DataFrame = {
-    val auditing = s.conf.get(graft.core.Cuts.ConfKey, "local") == "none"
-    val localN = s.conf.get(LocalNKey, "200000").toLong
-    if (n <= localN && !auditing) {
+    if (graft.core.Hybrid.local(s, LocalNodes)(n)) {
       // driver-local solve: the edge multiset comes from the caller's
       // exact local generator twin when one exists (all three fixtures
       // are deterministic range formulas — the r17 second pass measured

@@ -33,21 +33,6 @@ object PipelineE2E {
   def all: Seq[QueryDef] = Seq(curationE2E, mixManifest,
     pipelineIncrementalE2E)
 
-  /** Overlap independent store writes (guide §2.6: Spark happily runs
-    * several jobs at once inside one application; sequential actions are
-    * only sequential because the driver calls them sequentially). Every
-    * task here is a write to a DIFFERENT table/path whose input frames
-    * are ALREADY materialized (localCheckpoint blocks), so the only
-    * shared state is the session catalog — per-table, thread-safe. Wall
-    * time per phase drops from the sum of the per-write fixed job costs
-    * to roughly their max. */
-  private def inParallel(tasks: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.sequence(tasks.map(t => Future(t()))), Duration.Inf)
-  }
-
   /** Ingest-day assignment: `doc_id % 8` ∈ {5, 6, 7} are days 1–3's
     * batches, everything else is the day-0 bootstrap corpus — the
     * `dedup_incremental` batch convention extended to a 3-day ledger
@@ -136,7 +121,7 @@ object PipelineE2E {
     // for this; materializing via count() instead lets all five store
     // writes overlap (§2.6) — the writes were the bootstrap's wall time.
     sets0.count()
-    inParallel(Seq(
+    graft.core.Par.run(Seq(
       () => Dedup.minhashBands(sets0)
         .write.mode("overwrite")
         .bucketBy(16, "band", "bkey").sortBy("band", "bkey")
@@ -291,7 +276,7 @@ object PipelineE2E {
     // the three appends touch three different tables and their inputs
     // are materialized checkpoint blocks (the day report's eager
     // checkpoint forced them) — overlap the independent writes (§2.6).
-    inParallel(
+    graft.core.Par.run(
       () => bands.write.mode("append")
         .bucketBy(16, "band", "bkey").sortBy("band", "bkey")
         .option("path", s"$base/graft_pipe_bands").format("parquet")
@@ -369,13 +354,10 @@ object PipelineE2E {
         // the report and the window-hash delta both read only the
         // PRE-append stores — overlap them (§2.6); the appends (which
         // move the tables) start strictly after both are materialized
-        var rep: DataFrame = null
-        var ngh: DataFrame = null
-        inParallel(
-          () => { rep = dayReportShared(s,
-            tokCorpus.filter(col("day") === dd), sets.filter(slice),
-            bands.filter(slice), bw.filter(slice), dd) },
-          () => { ngh = newWindowHashes(s, bw.filter(slice)) })
+        val (rep, ngh) = graft.core.Par.both(
+          dayReportShared(s, tokCorpus.filter(col("day") === dd),
+            sets.filter(slice), bands.filter(slice), bw.filter(slice), dd),
+          newWindowHashes(s, bw.filter(slice)))
         appendStoresPre(s, sets.filter(slice), bands.filter(slice), ngh,
           base)
         rep

@@ -140,6 +140,10 @@ object Quantiles {
     cum.agg(aggs.head, aggs.tail: _*)
   }
 
+  /** [[exactPercentiles]] keeps its narrowing state on the driver up to
+    * this many (spec, group, target rank) states. */
+  val LocalStates = 1024
+
   /** Exact interpolated percentiles per `group`, one output column per
     * spec. `buckets` trades narrowing sharpness against histogram size;
     * `sortThreshold` caps how many rows any final window sort may see —
@@ -186,8 +190,8 @@ object Quantiles {
     // round an eager localCheckpoint job, an isEmpty probe job, a
     // broadcast build and a windowed locate join, all driver-
     // synchronized (FnSplit: q23 fn=1.6 s for ~0.9 s of executor work).
-    // Below `spark.graft.quantileLocalStates` states the loop keeps its
-    // state in a driver array: each round is then ONE distributed job
+    // Up to [[LocalStates]] states ([[graft.core.Hybrid]]) the loop keeps
+    // its state in a driver array: each round is then ONE distributed job
     // (the histogram aggregate, whose output is ≤ buckets × states rows
     // — already a collect-sized relation by construction) and the
     // locate/threshold logic runs on the driver in the same exact
@@ -195,17 +199,13 @@ object Quantiles {
     // passes (histogram scan, final narrow sort) stay distributed and
     // identical. Above the bound (a 100 TB query grouping by a
     // high-cardinality key) the distributed loop below runs unchanged.
-    val localBound = df.sparkSession.sessionState.conf
-      .getConfString("spark.graft.quantileLocalStates", "1024").toInt
-    val statRows: Array[org.apache.spark.sql.Row] =
-      if (localBound > 0) stats.limit(localBound + 1).collect()
-      else Array.empty
-    if (localBound > 0 && statRows.length <= localBound)
-      return exactPercentilesLocal(df, group, specs, buckets,
-        sortThreshold, rows, statRows)
-
-    exactPercentilesDistributed(df, group, specs, buckets, sortThreshold,
-      rows, stats)
+    // The size probe's collected rows are the local loop's input.
+    lazy val statRows = stats.limit(LocalStates + 1).collect()
+    if (graft.core.Hybrid.local(df.sparkSession, LocalStates)(statRows.length))
+      exactPercentilesLocal(df, group, specs, buckets, sortThreshold, rows,
+        statRows)
+    else exactPercentilesDistributed(df, group, specs, buckets,
+      sortThreshold, rows, stats)
   }
 
   /** The pre-r17 fully-distributed narrowing loop — the at-scale path,

@@ -753,10 +753,7 @@ object Semantic {
     rsubs.count()
     val book = ivfPqBookOf(rsubs)
     val codes = ivfPqCodesOf(rsubs, book)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.sequence(Seq[() => Unit](
+    graft.core.Par.run(
       () => coarse.write.mode("overwrite")
         .option("path", s"$base/graft_ivfpq_coarse").format("parquet")
         .saveAsTable("graft_ivfpq_coarse"),
@@ -766,8 +763,7 @@ object Semantic {
       () => codes.write.mode("overwrite")
         .partitionBy("g_id")
         .option("path", s"$base/graft_ivfpq_codes").format("parquet")
-        .saveAsTable("graft_ivfpq_codes")).map(t => Future(t()))),
-      Duration.Inf)
+        .saveAsTable("graft_ivfpq_codes"))
   }
 
   /** [[ivfPqSearch]] over the stored index tables: only the query row

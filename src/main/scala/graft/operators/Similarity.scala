@@ -889,28 +889,22 @@ object Similarity {
     (base.select(col("rep"), col("embedding"), col("nrm")), topk)
   }
 
-  /** r17 hybrid cutover for the kNN-graph family — the sssp/massLoop
-    * localCutover pattern: at sf-tier corpus sizes (2000 vectors at
-    * sf0.1) the LSH self-join + NN-descent plans cost seconds of
-    * per-stage scheduling and plan-build (FnSplit: emb_knn_graph_refined
-    * fn=3.3 s for ~0.2 s of executor work) around milliseconds of real
-    * arithmetic. Below `spark.graft.knnLocalN` embedding rows (default
-    * 20 000; 0 disables) the class-collapse + norm + bucket hashes still
+  /** r17 hybrid cutover for the kNN-graph family ([[graft.core.Hybrid]]):
+    * at sf-tier corpus sizes (2000 vectors at sf0.1) the LSH self-join +
+    * NN-descent plans cost seconds of per-stage scheduling and
+    * plan-build (FnSplit: emb_knn_graph_refined fn=3.3 s for ~0.2 s of
+    * executor work) around milliseconds of real arithmetic. Up to this
+    * many embedding rows the class-collapse + norm + bucket hashes still
     * run DISTRIBUTED (one collect job — the hash/norm expressions are
     * never duplicated), and the pair join, cosine scoring and
     * top-k/NN-descent rounds run as a driver loop using the same
     * left-to-right double dot fold, so both paths are bit-identical BY
-    * CONSTRUCTION (KnnHybridSpec pins them; the oracle hashes every
-    * edge). `spark.graft.planCuts=none` forces the distributed plan for
-    * the sweep's shape audit. */
-  val KnnLocalNKey = "spark.graft.knnLocalN"
+    * CONSTRUCTION (HybridEquivalenceSpec pins them; the oracle hashes
+    * every edge). */
+  val KnnLocalRows = 20000L
 
-  private def knnUseLocal(s: SparkSession, d: String): Boolean = {
-    val auditing =
-      s.conf.get(graft.core.Cuts.ConfKey, "local") == "none"
-    val localN = s.conf.get(KnnLocalNKey, "20000").toLong
-    !auditing && localN > 0 && Tables.embeddings(s, d).count() <= localN
-  }
+  private def knnUseLocal(s: SparkSession, d: String): Boolean =
+    graft.core.Hybrid.local(s, KnnLocalRows)(Tables.embeddings(s, d).count())
 
   /** Collected class-collapsed base: rep, embedding, nrm, per-table
     * bucket ids — computed by the SAME distributed expressions knnBase
@@ -1172,7 +1166,7 @@ object Similarity {
     * incremental variants remain runnable in TimeKnnAb. */
   /** Driver-local twin of the NN-descent rounds below — same B ∪ R
     * candidate rule, rank caps, anti-join and (cosine desc, dst rep)
-    * re-rank, in exact arithmetic (see [[KnnLocalNKey]]). */
+    * re-rank, in exact arithmetic (see [[KnnLocalRows]]). */
   private def knnLocalRefine(
       base: Array[(Long, Array[Float], Double, Array[Int])],
       g0: Array[Vector[(Int, Double)]]): Array[Vector[(Int, Double)]] = {

@@ -44,29 +44,22 @@ object Spectral {
   def all: Seq[QueryDef] = Seq(powerIteration, powerDeflate, spectralOutliers,
     spectralMap, spectralStored)
 
-  /** r17 hybrid cutover for the spectral family — the sssp/massLoop/
-    * knnLocalN pattern: at sf-tier corpus sizes each training round is
-    * two shuffle jobs plus a driver collect around microseconds of
-    * integer arithmetic (FnSplit: emb_spectral_map fn=1.7 s for ~0.2 s
-    * of executor work; the map runs SIX rounds). Below
-    * `spark.graft.spectralLocalN` embedding rows (default 20 000; 0
-    * disables) the quantized vectors are collected ONCE (one job, the
-    * same quantize expression) and the rounds run as a driver loop in
-    * the identical exact-BIGINT arithmetic — bit-equal BY CONSTRUCTION
-    * (integer sums are order-free; SpectralHybridSpec pins both paths,
-    * the oracle hashes the result). The PROJECTION passes (outliers,
-    * 2-D map) stay distributed — they are per-vector output, the part
-    * that scales. `spark.graft.planCuts=none` forces the distributed
-    * spelling for the sweep's shape audit, as in the other cutovers. */
-  val SpectralLocalNKey = "spark.graft.spectralLocalN"
+  /** r17 hybrid cutover for the spectral family ([[graft.core.Hybrid]]):
+    * at sf-tier corpus sizes each training round is two shuffle jobs
+    * plus a driver collect around microseconds of integer arithmetic
+    * (FnSplit: emb_spectral_map fn=1.7 s for ~0.2 s of executor work;
+    * the map runs SIX rounds). Up to this many embedding rows the
+    * quantized vectors are collected ONCE (one job, the same quantize
+    * expression) and the rounds run as a driver loop in the identical
+    * exact-BIGINT arithmetic — bit-equal BY CONSTRUCTION (integer sums
+    * are order-free; HybridEquivalenceSpec pins both paths, the oracle
+    * hashes the result). The PROJECTION passes (outliers, 2-D map) stay
+    * distributed — they are per-vector output, the part that scales. */
+  val LocalRows = 20000L
 
   private def useLocal(s: org.apache.spark.sql.SparkSession,
-      d: String): Boolean = {
-    val auditing =
-      s.conf.get(graft.core.Cuts.ConfKey, "local") == "none"
-    val localN = s.conf.get(SpectralLocalNKey, "20000").toLong
-    !auditing && localN > 0 && Tables.embeddings(s, d).count() <= localN
-  }
+      d: String): Boolean =
+    graft.core.Hybrid.local(s, LocalRows)(Tables.embeddings(s, d).count())
 
   /** The quantized vectors, collected by the SAME quantize expression
     * [[qeOf]] explodes — one job, row-per-vector. */

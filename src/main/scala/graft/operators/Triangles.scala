@@ -35,32 +35,27 @@ object Triangles {
 
   val N = 1000L
 
-  /** Hybrid cutover gate (r17, second pass) — the massLoop/sssp
-    * localCutover pattern applied to the wedge/triangle family: below
-    * `spark.graft.graphLocalN` nodes the whole enumeration (including
-    * the deterministic edge generation, which reads no input) runs on
-    * the driver in exact integer arithmetic. The r16 PERF scaling block
+  /** Hybrid cutover gate (r17, second pass; [[graft.core.Hybrid]]) —
+    * PageRank's pattern applied to the wedge/triangle family: up to
+    * [[PageRank.LocalNodes]] nodes the whole enumeration (including the
+    * deterministic edge generation, which reads no input) runs on the
+    * driver in exact integer arithmetic. The r16 PERF scaling block
     * measured this family FASTER at 8 cores than 32 — fixed per-stage
     * cost, not data — and the r17 PageRank decomposition (BenchProbe +
     * FnSplit, OPTIMIZATION_r17.md) located that cost in driver-side
     * planning/scheduling of multi-join plans over ~3 k generated rows.
     * Exact-integer combinatorics make the two paths bit-identical BY
-    * CONSTRUCTION; TriangleHybridSpec pins every entry's local path
+    * CONSTRUCTION; HybridEquivalenceSpec pins every entry's local path
     * against its distributed plan row-by-row, and the DuckDB oracle
     * hashes the full output. The final double expressions (coeff,
     * jaccard, assortativity) are evaluated by the SAME Catalyst column
-    * trees in both paths, so no float-spelling drift is possible.
-    * `spark.graft.planCuts=none` (the sweep's audit mode) forces the
-    * distributed plan so its shape stays reviewed. */
-  private def useLocal(s: SparkSession, n: Long): Boolean = {
-    val auditing = s.conf.get(graft.core.Cuts.ConfKey, "local") == "none"
-    val localN = s.conf.get(PageRank.LocalNKey, "200000").toLong
-    n <= localN && !auditing
-  }
+    * trees in both paths, so no float-spelling drift is possible. */
+  private def useLocal(s: SparkSession, n: Long): Boolean =
+    graft.core.Hybrid.local(s, PageRank.LocalNodes)(n)
 
   /** Driver-local twin of [[simpleEdges]]: ring + skip-2 + skip-7
     * chords, deduplicated unordered pairs — exact long arithmetic,
-    * same relation by construction (TriangleHybridSpec pins it via the
+    * same relation by construction (HybridEquivalenceSpec pins it via the
     * entries). */
   def simpleEdgesLocal(n: Long): Array[(Long, Long)] = {
     val pairs = scala.collection.mutable.LinkedHashSet.empty[(Long, Long)]

@@ -145,15 +145,10 @@ object Sinks {
       // §2.6): the fragment write is row-preserving, so counting the
       // SOURCE concurrently gives exactly the rows compact() would have
       // re-counted from the fragmented copy — one fewer sequential job
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val rowsF = Future(src.count())
-      src.repartition(64)
-        .write.mode(SaveMode.Overwrite).parquet(frag)
+      val (rows, _) = graft.core.Par.both(src.count(),
+        src.repartition(64).write.mode(SaveMode.Overwrite).parquet(frag))
       val out = sinkPath(d, "lineitem_compacted")
-      val planned = compact(s, frag, out, target,
-        knownRows = Some(Await.result(rowsF,
-          scala.concurrent.duration.Duration.Inf)))
+      val planned = compact(s, frag, out, target, knownRows = Some(rows))
       s.read.parquet(out)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),

@@ -1,6 +1,23 @@
 package graft
 
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Alias, And,
+  AttributeReference, EqualTo, ExprId, Expression, In, InSet, LessThan,
+  LessThanOrEqual, Literal, Slice}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectList, CollectSet}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Project,
+  Window, WindowGroupLimit}
+import org.apache.spark.sql.execution.{ColumnarToRowExec,
+  FileSourceScanExec, FilterExec, GlobalLimitExec, InputAdapter,
+  LocalLimitExec, LocalTableScanExec, ProjectExec, RangeExec, SparkPlan,
+  TakeOrderedAndProjectExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
+  ObjectHashAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+  ReusedExchangeExec}
+import org.apache.spark.sql.functions.{col, count, countDistinct, lit, min}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import graft.core.{Cuts, Hybrid}
 
 /** Catalog-wide plan invariants, asserted over EVERY entry rather than the
   * per-query spot guards in PlanShapeSpec:
@@ -124,7 +141,8 @@ class CatalogPlanSweepSpec extends SparkSpec {
 
   /** Reviewed bounds for HINTED broadcasts that do NOT carry an in-plan
     * boundedness witness (local relation, limit, global aggregate, range,
-    * or fixed-cardinality table): entry name → substrings matching the
+    * or scans that are each a fixed-cardinality table or key-filtered on a
+    * declared unique key): entry name → substrings matching the
     * broadcast descriptor, each with the reviewed reason the relation
     * stays small at ANY corpus size. A new data-scaled hinted broadcast
     * fails the sweep until it is bounded here — a deliberate reviewed
@@ -151,62 +169,13 @@ class CatalogPlanSweepSpec extends SparkSpec {
     // KM hazard factors: one row per EVENT age, ages clamped to the
     // fixed KmHorizon-day follow-up → ≤ HORIZON+1 rows by construction
     "ev_survival_km" -> Seq("agg[t]<-[events]"),
-    // K centroid seeds: `vec_id < K` key-range filter, K fixed
-    "emb_kmeans_assign" -> Seq("agg[-]<-[embeddings]"),
-    // same K-seed centroid broadcast, rank-2 instead of rank-1
-    "emb_silhouette" -> Seq("agg[-]<-[embeddings]"),
-    // same K-seed centroid broadcast for the SemDeDup assignment step
-    "dedup_semantic" -> Seq("agg[-]<-[embeddings]"),
-    // same K-seed centroid broadcast quantizing both drift snapshots
-    "emb_drift_psi" -> Seq("agg[-]<-[embeddings]"),
-    // 4×8-entry PQ codebook and the 32-row query-ADC table: both bounded
-    // by `vec_id < 8` / `vec_id = 0` key filters over the seed prefix
-    "emb_pq_topk" -> Seq("agg[-]<-[embeddings]"),
-    // trained twin: the remaining embeddings-scanning broadcasts are the
-    // one-row query vector (`vec_id = 0`) and the query-ADC table (same
-    // filter × the M·K driver-local codebook) — the learned codebook
-    // itself is a LocalTableScan, bounded by construction
-    "emb_pq_topk_trained" -> Seq("agg[-]<-[embeddings]"),
-    // IVF-PQ: coarse centroids (vec_id < 8), residual codebook seeds
-    // (vec_id < 32), the per-probe ADC table, and the one-row query —
-    // each a key-range filter over the seed prefix or derived from one;
-    // the shortlist carries an explicit LIMIT
-    "emb_ivfpq_topk" -> Seq("agg[-]<-[embeddings]"),
     // query-term document frequencies: ≤ |q| rows by the literal IN
     // filter on the fixed 3-term query — bounded at any corpus size
     "text_bm25" -> Seq("agg[w]<-[documents]"),
     // RRF sparse leg inherits text_bm25's ≤|q|-row df broadcast; the
-    // dense leg broadcasts the 1-row query vector (`vec_id = 0` key
-    // filter over embeddings); the fused join sides both carry explicit
-    // LIMIT-50s
+    // fused join sides both carry explicit LIMIT-50s
     "retrieval_hybrid_rrf" -> Seq("agg[w]<-[documents]",
-      "agg[-]<-[documents]", "agg[doc_id]<-[documents]",
-      "agg[-]<-[embeddings]"),
-    // 20-query probe set (`vec_id < 20`), and for IVF the K-cell
-    // centroid sample plus 20×nprobe probe assignments
-    "sim_topk_bruteforce" -> Seq("agg[-]<-[embeddings]"),
-    // NDCG eval: the 5-query exact-leg cross join (`vec_id < 5` key
-    // filter — the sim_topk_bruteforce shape) and the 5×35-row LSH
-    // probe set derived from the same filtered relation
-    "eval_ndcg" -> Seq("agg[-]<-[embeddings]"),
-    // MRR/recall eval shares eval_ndcg's two legs: the 5-query exact
-    // cross join (`vec_id < 5` key filter) and the derived probe set
-    "eval_mrr" -> Seq("agg[-]<-[embeddings]"),
-    "sim_topk_quantized" -> Seq("agg[-]<-[embeddings]"),
-    // 5-query probe set (`vec_id < 5` key filter) — the bruteforce shape
-    // with two packed sign words riding along
-    "sim_topk_binary" -> Seq("agg[-]<-[embeddings]"),
-    "sim_topk_matryoshka" -> Seq("agg[-]<-[embeddings]"),
-    // k-row seed-centroid broadcast (`vec_id < 8` key filter)
-    "curate_cluster_balanced" -> Seq("agg[-]<-[embeddings]"),
-    // every MMR-round broadcast descends from the LIMIT-20 shortlist,
-    // the 1-row query vector, or the ≤5-row selected set — all bounded
-    // by the shortlist LIMIT by construction (the sweep plans with
-    // spark.graft.planCuts=none, so the shortlist's limit witness is
-    // visible; the empty-source form covers driver-local selected sets)
-    "retrieval_mmr_rerank" -> Seq("agg[-]<-[]", "agg[-]<-[embeddings]"),
-    "sim_ann_lsh" -> Seq("agg[-]<-[embeddings]"),
-    "sim_ann_ivf" -> Seq("agg[-]<-[embeddings]"),
+      "agg[-]<-[documents]", "agg[doc_id]<-[documents]"),
     // calendar-bounded minute-bucket grid (distinct minutes of the span)
     "ev_range_join" -> Seq("agg[_groupingexpression]<-[events]"),
     // LOCF carry offsets: one row per (series × hour bucket) — series set
@@ -263,143 +232,6 @@ class CatalogPlanSweepSpec extends SparkSpec {
     "eval_langid_confusion" -> Seq("agg[lang,w]<-[documents]",
       "agg[sig_lang]<-[documents]", "agg[-]<-[]"))
 
-  test("every BroadcastExchange in every catalog plan is bounded by construction or by review") {
-    import org.apache.spark.sql.execution.{SparkPlan, FileSourceScanExec,
-      LocalTableScanExec, GlobalLimitExec, LocalLimitExec,
-      TakeOrderedAndProjectExec, RangeExec}
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
-      ReusedExchangeExec}
-    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
-      ObjectHashAggregateExec, SortAggregateExec}
-    // region (5 rows) and nation (25) have FIXED cardinality at every
-    // scale factor — broadcasting them is bounded by construction
-    val fixedCardTables = Set("region", "nation")
-    def tableName(f: FileSourceScanExec): String =
-      f.relation.location.rootPaths.headOption
-        .map(_.getName.stripSuffix(".parquet")).getOrElse("?")
-    def describe(b: SparkPlan): (String, Boolean) = {
-      var hasLocal = false
-      var hasLimit = false
-      val tables = scala.collection.mutable.SortedSet.empty[String]
-      var aggKeys: Option[Seq[String]] = None
-      var globalAgg = false
-      def walk(p: SparkPlan): Unit = {
-        p match {
-          // driver-built local relations and literal ranges are bounded
-          // by construction
-          case _: LocalTableScanExec | _: RangeExec => hasLocal = true
-          case _: GlobalLimitExec | _: LocalLimitExec |
-              _: TakeOrderedAndProjectExec => hasLimit = true
-          case f: FileSourceScanExec => tables += tableName(f)
-          case r: ReusedExchangeExec => walk(r.child)
-          case a: HashAggregateExec if aggKeys.isEmpty =>
-            aggKeys = Some(a.groupingExpressions.map(_.name))
-            globalAgg = a.groupingExpressions.isEmpty
-          case a: ObjectHashAggregateExec if aggKeys.isEmpty =>
-            aggKeys = Some(a.groupingExpressions.map(_.name))
-            globalAgg = a.groupingExpressions.isEmpty
-          case a: SortAggregateExec if aggKeys.isEmpty =>
-            aggKeys = Some(a.groupingExpressions.map(_.name))
-            globalAgg = a.groupingExpressions.isEmpty
-          case _ =>
-        }
-        p.children.foreach(walk)
-        p.subqueries.foreach(walk)
-      }
-      walk(b)
-      val desc = s"agg[${aggKeys.map(_.mkString(",")).getOrElse("-")}]" +
-        s"<-[${tables.mkString(",")}]"
-      // bounded witnesses: a driver-local/range relation, an explicit
-      // limit, a topmost GLOBAL aggregate (exactly one row), or leaves
-      // drawn only from fixed-cardinality tables
-      val bounded = hasLocal || hasLimit || globalAgg ||
-        (tables.nonEmpty && tables.forall(fixedCardTables))
-      (desc, bounded)
-    }
-    val failures = scala.collection.mutable.ListBuffer.empty[String]
-    var found = 0
-    // exchanges are inserted by the plan preparations (EnsureRequirements),
-    // which AQE hides inside AdaptiveSparkPlanExec until execution —
-    // disable it so executedPlan is the fully-prepared static plan. Also
-    // disable stats-based auto-broadcast: a small-at-this-SF relation that
-    // auto-broadcasts at sf0.001 correctly stops broadcasting at 100 TB,
-    // so it is not a scale hazard — the broadcasts that must be bounded
-    // are the ones FORCED by an explicit broadcast() hint, which survive
-    // at any scale. Threshold -1 leaves exactly those in the plan.
-    // plan with lazy cuts DISABLED (spark.graft.planCuts=none): a cut's
-    // LogicalRDD leaf would hide the producing subtree — and with it the
-    // scan/limit/aggregate boundedness witness — from this walk (r17;
-    // the r16 checkpoint cuts turned agg[bkt]<-[lineitem] descriptors
-    // into unauditable agg[bkt]<-[] blanks)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevCuts = spark.conf.get(graft.core.Cuts.ConfKey, "local")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set(graft.core.Cuts.ConfKey, "none")
-      graft.queries.Registry.all
-        .filterNot(q => eagerOrWriting(q.name))
-        .foreach { q =>
-          try {
-            val plan = q.fn(spark, sf("sf0.001")).queryExecution.executedPlan
-            val broadcasts = plan.collect { case b: BroadcastExchangeExec => b }
-            found += broadcasts.size
-            broadcasts.foreach { b =>
-              val (desc, bounded) = describe(b)
-              val reviewed = boundedBroadcastsByReview.getOrElse(q.name, Nil)
-                .exists(desc.contains)
-              if (!bounded && !reviewed)
-                failures += s"${q.name}: unbounded broadcast $desc"
-            }
-          } catch {
-            case e: Throwable =>
-              failures += s"${q.name}: ${e.getClass.getSimpleName} ${e.getMessage}"
-          }
-        }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-      spark.conf.set(graft.core.Cuts.ConfKey, prevCuts)
-    }
-    info(s"$found broadcast exchanges enumerated across the catalog")
-    assert(found > 0, "sweep found no broadcasts — plan walk is broken")
-    assert(failures.isEmpty,
-      s"${failures.size} unbounded broadcast(s):\n${failures.mkString("\n")}")
-  }
-
-  test("every catalog entry plans; no CartesianProduct outside the declared yardsticks") {
-    val failures = scala.collection.mutable.ListBuffer.empty[String]
-    // cuts off: audit the full lineage, not a LogicalRDD leaf (see test 1)
-    val prevCuts = spark.conf.get(graft.core.Cuts.ConfKey, "local")
-    spark.conf.set(graft.core.Cuts.ConfKey, "none")
-    try graft.queries.Registry.all
-      .filterNot(q => eagerOrWriting(q.name))
-      .foreach { q =>
-        try {
-          val df = q.fn(spark, sf("sf0.001"))
-          val plan = df.queryExecution.executedPlan match {
-            case a: AdaptiveSparkPlanExec => a.toString
-            case p => p.toString
-          }
-          if (plan.contains("CartesianProduct") && !quadraticYardsticks(q.name))
-            failures += s"${q.name}: CartesianProduct in plan"
-          val bareWindows = df.queryExecution.optimizedPlan.collect {
-            case w: org.apache.spark.sql.catalyst.plans.logical.Window
-                if w.partitionSpec.isEmpty => w
-            case g: org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit
-                if g.partitionSpec.isEmpty => g
-          }
-          if (bareWindows.nonEmpty && !serialWindowsByConstruction(q.name))
-            failures += s"${q.name}: ${bareWindows.size} unpartitioned window(s)"
-        } catch {
-          case e: Throwable => failures += s"${q.name}: ${e.getClass.getSimpleName} ${e.getMessage}"
-        }
-      }
-    finally spark.conf.set(graft.core.Cuts.ConfKey, prevCuts)
-    assert(failures.isEmpty, failures.mkString("\n"))
-  }
-
   /** Entries whose slice-after-collect is reviewed bounded (the collected
     * group is per-doc / per-basket / LIMIT-bounded, never corpus-scaled).
     * Empty today: `text_inverted_index` — the one offender this guard was
@@ -407,61 +239,239 @@ class CatalogPlanSweepSpec extends SparkSpec {
     * word BEFORE collecting. */
   private val boundedSliceAfterCollect = Set.empty[String]
 
-  test("no plan slices a collect_list/collect_set result (truncate-before-collect)") {
-    // slicing AFTER collect_list means the full group was buffered in one
-    // aggregation buffer and then thrown away — for a data-scaled group
-    // (a stopword's postings, a hub node's neighbors) that buffer is
-    // corpus-sized. The scale-correct spelling is a per-group rank filter
-    // (WindowGroupLimit) BEFORE the collect, so the buffer is bounded by
-    // the rank cap. This sweep bans the anti-pattern catalog-wide.
-    import org.apache.spark.sql.catalyst.expressions.{Alias, ExprId, Slice}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectList, CollectSet}
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Project}
-    val failures = scala.collection.mutable.ListBuffer.empty[String]
-    // cuts off: audit the full lineage, not a LogicalRDD leaf (see test 1)
-    val prevCuts = spark.conf.get(graft.core.Cuts.ConfKey, "local")
-    spark.conf.set(graft.core.Cuts.ConfKey, "none")
-    try graft.queries.Registry.all
-      .filterNot(q => eagerOrWriting(q.name))
-      .filterNot(q => boundedSliceAfterCollect(q.name))
-      .foreach { q =>
-        try {
-          val plan = q.fn(spark, sf("sf0.001")).queryExecution.optimizedPlan
-          // attributes whose value is (derived from) a collect_list /
-          // collect_set result, propagated through Project aliases
-          var derived = Set.empty[ExprId]
-          plan.foreachUp {
-            case a: Aggregate =>
-              a.aggregateExpressions.foreach {
-                case al: Alias if al.child.exists(e =>
-                    e.isInstanceOf[CollectList] || e.isInstanceOf[CollectSet]) =>
-                  derived += al.exprId
-                case _ =>
-              }
-            case p: Project =>
-              p.projectList.foreach {
-                case al: Alias
-                    if al.child.references.exists(r => derived(r.exprId)) =>
-                  derived += al.exprId
-                case _ =>
-              }
-            case _ =>
-          }
-          val offending = plan.collect { case n =>
-            n.expressions.flatMap(_.collect {
-              case s: Slice if s.exists(e =>
-                    e.isInstanceOf[CollectList] || e.isInstanceOf[CollectSet]) ||
-                  s.references.exists(r => derived(r.exprId)) => s
-            })
-          }.flatten
-          if (offending.nonEmpty)
-            failures += s"${q.name}: ${offending.size} slice-after-collect"
-        } catch {
-          case e: Throwable =>
-            failures += s"${q.name}: ${e.getClass.getSimpleName} ${e.getMessage}"
-        }
+  /** One entry's findings for each of the three sweeps. */
+  private case class Audit(broadcasts: Int, broadcastFailures: Seq[String],
+      planFailures: Seq[String], sliceFailures: Seq[String])
+
+  /** Calls every entry's `fn` ONCE and runs all three sweeps on that one
+    * DataFrame. `planCuts=none`: a cut's LogicalRDD leaf would hide the
+    * producing subtree — and with it the scan/limit/aggregate
+    * boundedness witness — from the walks (r17; the r16 checkpoint cuts
+    * turned agg[bkt]<-[lineitem] descriptors into unauditable
+    * agg[bkt]<-[] blanks). `hybrid=distributed`: audit the plan that runs
+    * at scale, not the driver-local twin a fixture-sized input takes. */
+  private lazy val audits: Seq[Audit] =
+    withConf(Cuts.ConfKey -> "none", Hybrid.ConfKey -> "distributed") {
+      graft.queries.Registry.all
+        .filterNot(q => eagerOrWriting(q.name))
+        .map(audit)
+    }
+
+  private def audit(q: QueryDef): Audit = {
+    val name = q.name
+    def failed(e: Throwable) =
+      Seq(s"$name: ${e.getClass.getSimpleName} ${e.getMessage}")
+    def guarded(check: => Seq[String]) =
+      try check catch { case e: Throwable => failed(e) }
+    try {
+      val df = q.fn(spark, sf("sf0.001"))
+      val (broadcasts, broadcastFailures) =
+        try broadcastAudit(name, df) catch { case e: Throwable => (0, failed(e)) }
+      Audit(broadcasts, broadcastFailures, guarded(planAudit(name, df)),
+        if (boundedSliceAfterCollect(name)) Nil
+        else guarded(sliceAudit(name, df)))
+    } catch {
+      case e: Throwable => Audit(0, failed(e), failed(e), failed(e))
+    }
+  }
+
+  /** Region (5 rows) and nation (25) have FIXED cardinality at every
+    * scale factor — broadcasting them is bounded by construction. */
+  private val fixedCardTables = Set("region", "nation")
+
+  private def tableName(f: FileSourceScanExec): String =
+    f.relation.location.rootPaths.headOption
+      .map(_.getName.stripSuffix(".parquet")).getOrElse("?")
+
+  /** Declared unique, non-negative integer keys per table. A filter
+    * conjunct `k < lit`, `k <= lit`, `k = lit` or `k IN (lits)` on one of
+    * them bounds its scan to a literal-sized row count at any scale. The
+    * broadcast test checks each declaration on the fixture. */
+  private val uniqueKeys = Map("embeddings" -> Set("vec_id"))
+
+  /** The scan directly below `p` through row-preserving operators only. */
+  private def scanBelow(p: SparkPlan): Option[FileSourceScanExec] = p match {
+    case f: FileSourceScanExec => Some(f)
+    case _: ProjectExec | _: FilterExec | _: ColumnarToRowExec |
+        _: WholeStageCodegenExec | _: InputAdapter => scanBelow(p.children.head)
+    case _ => None
+  }
+
+  /** Whether `f` bounds `scan` by a key conjunct: the attribute must be
+    * the scan's own declared-unique column, not a projected look-alike. */
+  private def keyFilters(f: FilterExec, scan: FileSourceScanExec): Boolean = {
+    val keys = uniqueKeys.getOrElse(tableName(scan), Set.empty[String])
+    def isKey(e: Expression) = e match {
+      case a: AttributeReference =>
+        keys(a.name) && scan.output.exists(_.exprId == a.exprId)
+      case _ => false
+    }
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case c => Seq(c)
+    }
+    conjuncts(f.condition).exists {
+      case LessThan(k, _: Literal) => isKey(k)
+      case LessThanOrEqual(k, _: Literal) => isKey(k)
+      case EqualTo(k, _: Literal) => isKey(k)
+      case In(k, lits) => lits.forall(_.isInstanceOf[Literal]) && isKey(k)
+      case InSet(k, _) => isKey(k)
+      case _ => false
+    }
+  }
+
+  /** A broadcast's descriptor (topmost aggregate keys and the scanned
+    * tables) and whether an in-plan witness bounds it. */
+  private def describe(b: SparkPlan): (String, Boolean) = {
+    var hasLocal = false
+    var hasLimit = false
+    val scans = scala.collection.mutable.ArrayBuffer.empty[FileSourceScanExec]
+    val keyBounded = scala.collection.mutable.ArrayBuffer.empty[FileSourceScanExec]
+    var aggKeys: Option[Seq[String]] = None
+    var globalAgg = false
+    def walk(p: SparkPlan): Unit = {
+      p match {
+        // driver-built local relations and literal ranges are bounded
+        // by construction
+        case _: LocalTableScanExec | _: RangeExec => hasLocal = true
+        case _: GlobalLimitExec | _: LocalLimitExec |
+            _: TakeOrderedAndProjectExec => hasLimit = true
+        case f: FileSourceScanExec => scans += f
+        case f: FilterExec =>
+          keyBounded ++= scanBelow(f.child).filter(keyFilters(f, _))
+        case r: ReusedExchangeExec => walk(r.child)
+        case a: HashAggregateExec if aggKeys.isEmpty =>
+          aggKeys = Some(a.groupingExpressions.map(_.name))
+          globalAgg = a.groupingExpressions.isEmpty
+        case a: ObjectHashAggregateExec if aggKeys.isEmpty =>
+          aggKeys = Some(a.groupingExpressions.map(_.name))
+          globalAgg = a.groupingExpressions.isEmpty
+        case a: SortAggregateExec if aggKeys.isEmpty =>
+          aggKeys = Some(a.groupingExpressions.map(_.name))
+          globalAgg = a.groupingExpressions.isEmpty
+        case _ =>
       }
-    finally spark.conf.set(graft.core.Cuts.ConfKey, prevCuts)
+      p.children.foreach(walk)
+      p.subqueries.foreach(walk)
+    }
+    walk(b)
+    val desc = s"agg[${aggKeys.map(_.mkString(",")).getOrElse("-")}]" +
+      s"<-[${scans.map(tableName).distinct.sorted.mkString(",")}]"
+    // bounded witnesses: a driver-local/range relation, an explicit
+    // limit, a topmost GLOBAL aggregate (exactly one row), or scan leaves
+    // that are each a fixed-cardinality table or key-filtered
+    val bounded = hasLocal || hasLimit || globalAgg ||
+      (scans.nonEmpty && scans.forall(f =>
+        fixedCardTables(tableName(f)) || keyBounded.exists(_ eq f)))
+    (desc, bounded)
+  }
+
+  /** Broadcast count and unbounded, unreviewed broadcasts. Exchanges are
+    * inserted by the plan preparations (EnsureRequirements), which AQE
+    * hides inside AdaptiveSparkPlanExec until execution — so the entry's
+    * logical plan is re-planned with AQE off, leaving executedPlan the
+    * fully-prepared static plan. Stats-based auto-broadcast is off too:
+    * a small-at-this-SF relation that auto-broadcasts at sf0.001
+    * correctly stops broadcasting at 100 TB, so it is not a scale hazard
+    * — the broadcasts that must be bounded are the ones FORCED by an
+    * explicit broadcast() hint, which survive at any scale. Threshold -1
+    * leaves exactly those in the plan. */
+  private def broadcastAudit(name: String, df: DataFrame): (Int, Seq[String]) = {
+    val plan = withConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      spark.sessionState.executePlan(df.queryExecution.logical).executedPlan
+    }
+    val broadcasts = plan.collect { case b: BroadcastExchangeExec => b }
+    val reviewed = boundedBroadcastsByReview.getOrElse(name, Nil)
+    (broadcasts.size, broadcasts.map(describe).collect {
+      case (desc, false) if !reviewed.exists(desc.contains) =>
+        s"$name: unbounded broadcast $desc"
+    })
+  }
+
+  /** CartesianProduct and unpartitioned-window findings, on the entry's
+    * own plans under default settings: a -1 broadcast threshold would
+    * turn every broadcast nested-loop join into a CartesianProduct. */
+  private def planAudit(name: String, df: DataFrame): Seq[String] = {
+    val cartesian =
+      if (df.queryExecution.executedPlan.toString.contains("CartesianProduct") &&
+          !quadraticYardsticks(name))
+        Seq(s"$name: CartesianProduct in plan")
+      else Nil
+    val bareWindows = df.queryExecution.optimizedPlan.collect {
+      case w: Window if w.partitionSpec.isEmpty => w
+      case g: WindowGroupLimit if g.partitionSpec.isEmpty => g
+    }
+    cartesian ++ (
+      if (bareWindows.nonEmpty && !serialWindowsByConstruction(name))
+        Seq(s"$name: ${bareWindows.size} unpartitioned window(s)")
+      else Nil)
+  }
+
+  /** Slicing AFTER collect_list means the full group was buffered in one
+    * aggregation buffer and then thrown away — for a data-scaled group
+    * (a stopword's postings, a hub node's neighbors) that buffer is
+    * corpus-sized. The scale-correct spelling is a per-group rank filter
+    * (WindowGroupLimit) BEFORE the collect, so the buffer is bounded by
+    * the rank cap. */
+  private def sliceAudit(name: String, df: DataFrame): Seq[String] = {
+    val plan = df.queryExecution.optimizedPlan
+    // attributes whose value is (derived from) a collect_list /
+    // collect_set result, propagated through Project aliases
+    var derived = Set.empty[ExprId]
+    plan.foreachUp {
+      case a: Aggregate =>
+        a.aggregateExpressions.foreach {
+          case al: Alias if al.child.exists(e =>
+              e.isInstanceOf[CollectList] || e.isInstanceOf[CollectSet]) =>
+            derived += al.exprId
+          case _ =>
+        }
+      case p: Project =>
+        p.projectList.foreach {
+          case al: Alias
+              if al.child.references.exists(r => derived(r.exprId)) =>
+            derived += al.exprId
+          case _ =>
+        }
+      case _ =>
+    }
+    val offending = plan.collect { case n =>
+      n.expressions.flatMap(_.collect {
+        case s: Slice if s.exists(e =>
+              e.isInstanceOf[CollectList] || e.isInstanceOf[CollectSet]) ||
+            s.references.exists(r => derived(r.exprId)) => s
+      })
+    }.flatten
+    if (offending.nonEmpty) Seq(s"$name: ${offending.size} slice-after-collect")
+    else Nil
+  }
+
+  test("every BroadcastExchange in every catalog plan is bounded by construction or by review") {
+    for ((table, keys) <- uniqueKeys; k <- keys) {
+      val t = Tables.load(spark, sf("sf0.001"), table)
+      assert(Seq(ByteType, ShortType, IntegerType, LongType)
+        .contains(t.schema(k).dataType), s"$table.$k is declared an integer key")
+      val r = t.agg(count(lit(1)), countDistinct(col(k)),
+        min(col(k)).cast("long")).head()
+      assert(r.getLong(0) == r.getLong(1), s"$table.$k is declared unique")
+      assert(r.getLong(2) >= 0, s"$table.$k is declared non-negative")
+    }
+    val found = audits.map(_.broadcasts).sum
+    val failures = audits.flatMap(_.broadcastFailures)
+    info(s"$found broadcast exchanges enumerated across the catalog")
+    assert(found > 0, "sweep found no broadcasts — plan walk is broken")
+    assert(failures.isEmpty,
+      s"${failures.size} unbounded broadcast(s):\n${failures.mkString("\n")}")
+  }
+
+  test("every catalog entry plans; no CartesianProduct outside the declared yardsticks") {
+    val failures = audits.flatMap(_.planFailures)
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("no plan slices a collect_list/collect_set result (truncate-before-collect)") {
+    val failures = audits.flatMap(_.sliceFailures)
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 }

@@ -1,26 +1,14 @@
 package graft
 
-/** LPA hybrid cutover (r17): the driver-local loop must produce
-  * BIT-IDENTICAL labels/modularity rows to the distributed unrolled
-  * plan — same contract as PageRankHybridSpec. `graphLocalN=0` forces
-  * the distributed path. */
+/** LPA hybrid cutover: the driver-local loop must produce BIT-IDENTICAL
+  * labels/modularity rows to the distributed unrolled plan — same
+  * contract as `HybridEquivalenceSpec`. `spark.graft.hybrid=distributed`
+  * forces the distributed path. */
 class LabelPropHybridSpec extends SparkSpec {
 
   private val entries = Seq("graph_label_prop", "graph_modularity")
 
   test("local LPA rounds == distributed unrolled-plan rounds") {
-    val fns = SparkEntry.queries
-    entries.foreach { name =>
-      val local = fns(name)(spark, sf("sf0.001")).collect().toSeq
-      val prev = spark.conf.get(graft.operators.PageRank.LocalNKey, "200000")
-      spark.conf.set(graft.operators.PageRank.LocalNKey, "0")
-      try {
-        val dist = fns(name)(spark, sf("sf0.001")).collect().toSeq
-        assert(local.size === dist.size, s"$name: row counts differ")
-        local.zip(dist).zipWithIndex.foreach { case ((l, d), i) =>
-          assert(l === d, s"$name: row $i differs: local=$l dist=$d")
-        }
-      } finally spark.conf.set(graft.operators.PageRank.LocalNKey, prev)
-    }
+    entries.foreach(assertLocalEqualsDistributed(_, "sf0.001"))
   }
 }

@@ -71,15 +71,13 @@ class PlanShapeSpec extends SparkSpec {
     // the K-row centroid frames carry explicit broadcast() hints; prove
     // the plan shape does not silently depend on stats-based
     // auto-broadcast by disabling it entirely (VERDICT r5 #7)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = planString(q("sim_ann_ivf_trained"))
       assert(p.contains("BroadcastNestedLoopJoin"),
         s"centroid crossJoin lost its broadcast hint:\n${p.take(2000)}")
       assert(!p.contains("CartesianProduct"),
         s"centroid join regressed to a cartesian shuffle:\n${p.take(2000)}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("q2_filter_project: predicate and projection reach the parquet scan") {
@@ -159,9 +157,7 @@ class PlanShapeSpec extends SparkSpec {
     // co-bucketed self-join on the bucket key: no shuffle on either side
     // (disable auto-broadcast so the sort-merge path — the 100 TB shape,
     // where neither side broadcasts — is what gets planned)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val a = t.select(col("l_orderkey"), col("l_quantity"))
       val b = t.select(col("l_orderkey"), col("l_extendedprice"))
       val jp = a.join(b, Seq("l_orderkey"))
@@ -169,18 +165,16 @@ class PlanShapeSpec extends SparkSpec {
       assert(jp.contains("SortMergeJoin"), jp.take(2000))
       assert(!jp.contains("ShuffleExchange") && !jp.contains("Exchange hashpartitioning"),
         s"co-bucketed join reshuffled:\n${jp.take(2000)}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("dedup_substring_stored: probe picks up the stored index bucketing — index side has no shuffle") {
     import org.apache.spark.sql.functions.col
     // run the entry once so the bucketed index table exists on disk
     q("dedup_substring_stored").collect()
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // force the sort-merge path (the 100 TB shape — a production index
-      // is far past any broadcast threshold)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // force the sort-merge path (the 100 TB shape — a production index
+    // is far past any broadcast threshold)
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val batch = Tables.documents(spark, sf("sf0.001"))
         .filter(col("doc_id") % 8 === 7)
       val flagged = graft.operators.Dedup
@@ -193,7 +187,7 @@ class PlanShapeSpec extends SparkSpec {
         .findAllIn(jp).length
       assert(exchanges == 1,
         s"expected only the batch side to shuffle, saw $exchanges:\n${jp.take(3000)}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("sink_range_layout: sorted layout lets the scan skip non-matching row groups") {
@@ -367,9 +361,7 @@ class PlanShapeSpec extends SparkSpec {
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10MB",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    withConf(confs: _*) {
       val d = sf("sf0.001")
       val urgent = Tables.orders(spark, d)
         .filter(col("o_orderpriority") === "1-URGENT")
@@ -379,9 +371,6 @@ class PlanShapeSpec extends SparkSpec {
       val p = joined.queryExecution.executedPlan.toString
       assert(p.toLowerCase.contains("bloom"),
         s"runtime bloom filter not injected:\n${p.take(3000)}")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -416,9 +405,7 @@ class PlanShapeSpec extends SparkSpec {
     val confs = Seq(
       "spark.sql.sources.useV1SourceList" -> "",
       "spark.sql.parquet.aggregatePushdown" -> "true")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    withConf(confs: _*) {
       val agg = spark.read.parquet(s"${sf("sf0.001")}/lineitem.parquet")
         .agg(count(lit(1)).as("n"), min(col("l_orderkey")).as("mn"),
           max(col("l_orderkey")).as("mx"))
@@ -432,22 +419,14 @@ class PlanShapeSpec extends SparkSpec {
         .collect().head
       assert(row.getLong(0) == naive.getLong(0) &&
         row.getLong(1) == naive.getLong(1) && row.getLong(2) == naive.getLong(2))
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
-  /** Plans `name` with the hybrid graph cutover disabled
-    * (`graphLocalN=0`) so the DISTRIBUTED plan — the one that runs at
-    * 100 TB — is what gets audited, not the driver-local twin. */
-  private def distributedGraphPlan(name: String): String = {
-    val key = graft.operators.PageRank.LocalNKey
-    val prev = spark.conf.get(key, "200000")
-    spark.conf.set(key, "0")
-    try planString(q(name))
-    finally spark.conf.set(key, prev)
-  }
+  /** Plans `name` with `spark.graft.hybrid=distributed` so the
+    * DISTRIBUTED plan — the one that runs at 100 TB — is what gets
+    * audited, not the driver-local twin. */
+  private def distributedGraphPlan(name: String): String =
+    withConf(graft.core.Hybrid.ConfKey -> "distributed")(planString(q(name)))
 
   test("graph_triangles: wedge and closing joins are hash equi joins, never nested loops") {
     val p = distributedGraphPlan("graph_triangles")
@@ -490,14 +469,11 @@ class PlanShapeSpec extends SparkSpec {
     // leaves and NO hp_bucket call survives into the entry's analyzed
     // plan — pin exactly that (the sssp LogicalRDD-pin recipe).
     // r17: the entry takes the hybrid local cutover at test corpus
-    // sizes; force the DISTRIBUTED path (knnLocalN=0) — this test pins
-    // that path's shape, KnnHybridSpec pins local == distributed values.
-    val key = graft.operators.Similarity.KnnLocalNKey
-    val prev = spark.conf.get(key, "20000")
-    spark.conf.set(key, "0")
-    val analyzed =
-      try q("emb_knn_graph_refined").queryExecution.analyzed.toString
-      finally spark.conf.set(key, prev)
+    // sizes; force the DISTRIBUTED path — this test pins that path's
+    // shape, HybridEquivalenceSpec pins local == distributed values.
+    val analyzed = withConf(graft.core.Hybrid.ConfKey -> "distributed") {
+      q("emb_knn_graph_refined").queryExecution.analyzed.toString
+    }
     assert(analyzed.contains("LogicalRDD"),
       s"expected the checkpointed base/graph leaves:\n${analyzed.take(2000)}")
     assert(!analyzed.contains("hp_bucket"),
@@ -576,9 +552,7 @@ class PlanShapeSpec extends SparkSpec {
     // satisfied by the STORED bucketing: the only hashpartitioning
     // exchange on (band, bkey) belongs to the day's batch side
     q("dedup_incremental_stored").count()
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = q("dedup_incremental_stored")
         .queryExecution.executedPlan.toString
       assert(p.contains("graft_minhash_bands") && p.contains("Bucketed: true"),
@@ -587,6 +561,6 @@ class PlanShapeSpec extends SparkSpec {
         "Exchange hashpartitioning\\(band".r.findAllMatchIn(p).size
       assert(bandExchanges == 1,
         s"stored band index reshuffled ($bandExchanges band exchanges):\n${p.take(3000)}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 }

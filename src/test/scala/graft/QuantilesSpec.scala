@@ -9,7 +9,8 @@ import graft.operators.Quantiles.Spec
   * interpolation expression) — exactness, not approximation. */
 class QuantilesSpec extends SparkSpec {
 
-  test("exactPercentiles is bit-equal to built-in percentile on lineitem") {
+  /** Median and p90 per return flag against the built-in aggregate. */
+  private def assertBitEqualOnLineitem(): Unit = {
     val li = Tables.lineitem(spark, sf("sf0.001"))
     val ours = Quantiles.exactPercentiles(li, "l_returnflag",
         Seq(Spec("l_quantity", 0.5, "median_qty"),
@@ -27,28 +28,15 @@ class QuantilesSpec extends SparkSpec {
     }
   }
 
-  test("distributed narrowing path (localStates=0) stays bit-equal") {
-    // r17: below spark.graft.quantileLocalStates the loop state lives on
-    // the driver; force the at-scale distributed spelling and pin it to
-    // the same built-in result so BOTH paths keep coverage.
-    val li = Tables.lineitem(spark, sf("sf0.001"))
-    spark.conf.set("spark.graft.quantileLocalStates", "0")
-    try {
-      val ours = Quantiles.exactPercentiles(li, "l_returnflag",
-          Seq(Spec("l_quantity", 0.5, "median_qty"),
-            Spec("l_extendedprice", 0.9, "p90_price")))
-        .orderBy("l_returnflag").collect()
-      val ref = li.groupBy(col("l_returnflag"))
-        .agg(expr("percentile(l_quantity, 0.5)").as("median_qty"),
-          expr("percentile(l_extendedprice, 0.9)").as("p90_price"))
-        .orderBy("l_returnflag").collect()
-      assert(ours.length == ref.length && ours.length >= 3)
-      ours.zip(ref).foreach { case (a, b) =>
-        assert(a.getString(0) == b.getString(0))
-        assert(a.getDouble(1) == b.getDouble(1))
-        assert(a.getDouble(2) == b.getDouble(2))
-      }
-    } finally spark.conf.unset("spark.graft.quantileLocalStates")
+  test("exactPercentiles is bit-equal to built-in percentile on lineitem") {
+    assertBitEqualOnLineitem()
+  }
+
+  test("distributed narrowing path (hybrid=distributed) stays bit-equal") {
+    // r17: up to Quantiles.LocalStates the loop state lives on the
+    // driver; force the at-scale distributed spelling and pin it to the
+    // same built-in result so BOTH paths keep coverage.
+    withConf(graft.core.Hybrid.ConfKey -> "distributed")(assertBitEqualOnLineitem())
   }
 
   test("exact at integral ranks, tiny groups, and constant columns") {

@@ -1,13 +1,13 @@
 package graft
 
-/** The wedge/triangle family's r17 hybrid cutover: the driver-local
+/** The wedge/triangle family's hybrid cutover: the driver-local
   * exact-integer kernels must produce BIT-IDENTICAL output to the
   * distributed plans for every entry — same contract as
-  * PageRankHybridSpec / LabelPropHybridSpec. `spark.graft.graphLocalN=0`
-  * forces the distributed path; the default takes the local path on
-  * these fixtures. The final double expressions (coeff, jaccard,
-  * assortativity) are the same Catalyst trees in both paths, so this
-  * also pins the exact-integer kernels feeding them. */
+  * `HybridEquivalenceSpec`. `spark.graft.hybrid=distributed` forces the
+  * distributed path; the default takes the local path on these fixtures.
+  * The final double expressions (coeff, jaccard, assortativity) are the
+  * same Catalyst trees in both paths, so this also pins the exact-integer
+  * kernels feeding them. */
 class TriangleHybridSpec extends SparkSpec {
 
   private val entries = Seq("graph_triangles", "graph_triangles_plaw",
@@ -15,18 +15,6 @@ class TriangleHybridSpec extends SparkSpec {
     "graph_assortativity")
 
   test("local cutover output == distributed plan output, row by row") {
-    val fns = SparkEntry.queries
-    entries.foreach { name =>
-      val local = fns(name)(spark, sf("sf0.001")).collect().toSeq
-      val prev = spark.conf.get(graft.operators.PageRank.LocalNKey, "200000")
-      spark.conf.set(graft.operators.PageRank.LocalNKey, "0")
-      try {
-        val dist = fns(name)(spark, sf("sf0.001")).collect().toSeq
-        assert(local.size === dist.size, s"$name: row counts differ")
-        local.zip(dist).zipWithIndex.foreach { case ((l, d), i) =>
-          assert(l === d, s"$name: row $i differs: local=$l dist=$d")
-        }
-      } finally spark.conf.set(graft.operators.PageRank.LocalNKey, prev)
-    }
+    entries.foreach(assertLocalEqualsDistributed(_, "sf0.001"))
   }
 }
