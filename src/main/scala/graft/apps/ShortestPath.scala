@@ -201,9 +201,8 @@ object ShortestPath {
     * 8 MB of plan-estimated edge rows ≈ 250 k (src, dst, weight) rows
     * per partition; the conf partition count stays the CAP, so any
     * graph bigger than conf × 8 MB (every production-scale graph) keeps
-    * exactly the pre-r16 plan. Env-tunable for cluster profiles. */
-  private def ssspBytesPerPart: Long =
-    sys.env.getOrElse("SPARK_GRAFT_SSSP_BYTES_PER_PART", "8388608").toLong
+    * exactly the pre-r16 plan. */
+  private val SsspBytesPerPart = 8L << 20
 
   def distributedSssp(edges: DataFrame, source: Long,
       batchLevels: Int = 8): DataFrame = {
@@ -225,7 +224,7 @@ object ShortestPath {
     // or coalesce, re-exchanged the loop 32-wide), while HashPartitioning
     // with 2 partitions co-partitions normally.
     val numParts = math.max(2L, math.min(conf.toLong,
-      ((estBytes + ssspBytesPerPart - 1) / ssspBytesPerPart)
+      ((estBytes + SsspBytesPerPart - 1) / SsspBytesPerPart)
         .min(BigInt(conf)).toLong)).toInt
     // compact regime: every exchange in the loop is pinned to numParts so
     // the co-partitioned frontier⋈edges join never reshuffles the edge

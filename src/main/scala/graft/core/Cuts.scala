@@ -80,18 +80,16 @@ object Par {
   * the cluster-wide default (the r16 PERF scaling block measured the
   * whole iterative graph family FASTER at 8 cores than 32 for exactly
   * this reason). The conf shuffle-partition count stays the CAP, so any
-  * graph bigger than conf × rowsPerPart keeps cluster-wide parallelism —
+  * graph bigger than conf × RowsPerPart keeps cluster-wide parallelism —
   * at 100 TB the plan is the same as before this change. Floor 2, not
   * 1: Spark will not co-partition a join at a single partition
-  * (see ShortestPath's measured note). Env-tunable for cluster
-  * profiles. */
+  * (see ShortestPath's measured note). */
 object Parallelism {
-  private def rowsPerPart: Long =
-    sys.env.getOrElse("SPARK_GRAFT_GRAPH_ROWS_PER_PART", "250000").toLong
+  private val RowsPerPart = 250000L
 
   def graphParts(s: org.apache.spark.sql.SparkSession, n: Long): Int = {
     val conf = s.sessionState.conf.numShufflePartitions
     math.max(2L, math.min(conf.toLong,
-      (n + rowsPerPart - 1) / rowsPerPart)).toInt
+      (n + RowsPerPart - 1) / RowsPerPart)).toInt
   }
 }

@@ -461,15 +461,14 @@ object Eval {
     * The score column is reused from the oracle-proven `text_quality`
     * PLAN (the survivorship convention — the two entries cannot
     * drift); scores are high-cardinality, so the cumulative counts run
-    * on the [[Quantiles]] two-level machinery: per-value counts
-    * bucketed by score, the only serial window over the ~#buckets
-    * offset relation, per-value cumsums bucket-partitioned. The oracle
+    * on [[graft.core.PrefixSum]]: per-value counts bucketed by score,
+    * the only serial window over the ~#buckets offset relation,
+    * per-value cumsums bucket-partitioned. The oracle
     * deliberately spells the SINGLE-level window over all distinct
     * scores, so hash equality proves the bucketed reduction (the
     * q56_skyline convention). */
   val auc = QueryDef("eval_auc",
     (s, d) => {
-      import org.apache.spark.sql.expressions.{Window => W}
       val scored = graft.operators.TextAnalysis.quality.fn(s, d)
         .select(col("quality").as("v"),
           when(col("n_tokens") >= 50L, 1L).otherwise(0L).as("pos"))
@@ -478,19 +477,7 @@ object Eval {
           sum(lit(1L) - col("pos")).as("cb"),
           count(lit(1)).as("c"))
       val b = counts.withColumn("bkt", floor(col("v") / lit(0.01)).cast("long"))
-      val bofs = b.groupBy(col("bkt")).agg(sum(col("c")).as("bc"))
-        .withColumn("boff",
-          coalesce(sum(col("bc")).over(
-            // serial by construction over the ~100-row bucket relation
-            // (allowlisted in CatalogPlanSweepSpec)
-            W.orderBy(col("bkt"))
-              .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-        .select(col("bkt"), col("boff"))
-      val cum = b.join(broadcast(bofs), "bkt")
-        .withColumn("cum",
-          col("boff") + sum(col("c")).over(
-            W.partitionBy(col("bkt")).orderBy(col("v"))
-              .rowsBetween(W.unboundedPreceding, 0)))
+      val cum = graft.core.PrefixSum.running(b, "bkt", "v", Seq("c" -> "cum"))
       cum.agg(sum(col("ca")).as("n_pos"), sum(col("cb")).as("n_neg"),
           sum(col("ca").cast("decimal(38,0)") *
             (lit(2L) * col("cum") - col("c") + lit(1L))).as("r1t"))

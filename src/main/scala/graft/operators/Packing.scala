@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.TextFunctions._
@@ -13,8 +12,9 @@ import graft.functions.TextFunctions._
   * The core primitive is a GLOBAL prefix sum over token counts, which a
   * naive window (`ORDER BY doc_id` with no partition) computes on a
   * single task — the classic scale cliff. This implementation uses the
-  * classic distributed-scan decomposition, with the bucket count bounded
-  * by the CLUSTER (the session's shuffle parallelism P), not the data:
+  * classic distributed-scan decomposition ([[graft.core.PrefixSum]]),
+  * with the bucket count bounded by the CLUSTER (the session's shuffle
+  * parallelism P), not the data:
   *
   *   1. docs are ranged into P buckets by doc_id
   *      (`width = max(doc_id) DIV P + 1`, a broadcast scalar),
@@ -63,22 +63,9 @@ object Packing {
       val docs = base.crossJoin(broadcast(width))
         .withColumn("bucket", expr("doc_id DIV w"))
         .drop("w")
-      // level 1+2: per-bucket subtotals, then running offsets over the
-      // ≤ P-row bucket relation — the only serial window, bounded by the
-      // cluster by construction (CatalogPlanSweepSpec's allowlist)
-      val bucketOffsets = docs.groupBy(col("bucket"))
-        .agg(sum(col("n")).as("bt"))
-        .withColumn("bp", coalesce(sum(col("bt")).over(
-          Window.orderBy(col("bucket"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("bucket"), col("bp"))
-      // level 3: intra-bucket running sum, parallel across buckets
-      val wIntra = Window.partitionBy(col("bucket")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = docs
-        .join(broadcast(bucketOffsets), "bucket")
-        .withColumn("o", col("bp") + coalesce(sum(col("n")).over(wIntra),
-          lit(0L)))
+      // exclusive running token offsets over the ≤ P-row bucket relation
+      val offsets = graft.core.PrefixSum.running(docs, "bucket", "doc_id",
+        Seq("n" -> "o"), inclusive = false)
       // each doc spans sequences floor(o/B) .. floor((o+n-1)/B)
       offsets
         .select(col("doc_id"), col("n"), col("o"),

@@ -66,9 +66,10 @@ object Quantiles {
     *
     * Mechanics: per-value counts (one shuffle, |distinct| rows), coarse
     * `width`-sized buckets whose per-bucket totals get the only serial
-    * window (a relation of ~range/width rows), then per-bucket
-    * cumulative counts parallelized by bucket. The value at rank k is
-    * the minimum value whose cumulative count reaches k+1.
+    * window (a relation of ~range/width rows, [[graft.core.PrefixSum]]'s
+    * offsets), then cumulative counts in the target buckets only. The
+    * value at rank k is the minimum value whose cumulative count reaches
+    * k+1.
     *
     * `ranks` are (outputName, rankExpr) pairs where rankExpr may
     * reference the column `n` (total row count) — e.g.
@@ -97,40 +98,34 @@ object Quantiles {
       width: Double, ranks: Seq[(String, Column)]): DataFrame = {
     val vc = counts.select(col("v"), col("c"))
     val b = vc.withColumn("bkt", floor(col("v") / width).cast("long"))
-    val bofs = b.groupBy(col("bkt")).agg(sum(col("c")).as("bc"))
-      .withColumn("boff",
-        coalesce(sum(col("bc")).over(
-          // Serial by construction over the small bucket relation —
-          // declared in CatalogPlanSweepSpec's serial-window allowlist
-          // (a constant partition key cannot express the intent: Spark's
-          // EliminateWindowPartitions strips foldable keys).
-          Window.orderBy(col("bkt"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    val bofs = graft.core.PrefixSum.offsets(b, "bkt", Seq("c"))
     // r17 (guide §2.3): the cumulative pass used to shuffle EVERY (v, c)
     // row through the per-bucket window and then re-scan vc for the
-    // total. Both are derivable from the bucket relation: n = Σ bc
+    // total. Both are derivable from the bucket relation: n = Σ c_total
     // (integer sum, order-free, value-identical), and the value at rank
-    // k can only live in the ONE bucket with boff ≤ k < boff + bc — so
-    // the window pass now touches only the ≤ |ranks| target buckets
-    // (located by a ≤ buckets × |ranks| explode over the bucket
-    // relation), not the whole distinct-value relation. The picked v is
-    // the same minimum value whose cumulative count reaches k + 1.
-    val tot = bofs.agg(sum(col("bc")).as("n"))
+    // k can only live in the ONE bucket with
+    // c_offset ≤ k < c_offset + c_total — so the window pass now touches
+    // only the ≤ |ranks| target buckets (located by a ≤ buckets × |ranks|
+    // explode over the bucket relation), not the whole distinct-value
+    // relation. The picked v is the same minimum value whose cumulative
+    // count reaches k + 1.
+    val tot = bofs.agg(sum(col("c_total")).as("n"))
     val kdf = tot.select(ranks.zipWithIndex.map { case ((_, kExpr), i) =>
       kExpr.cast("long").as(s"k$i")
     }: _*)
     val kArr = array(ranks.indices.map(i =>
       struct(lit(i).as("ri"), col(s"k$i").as("k"))): _*)
     val targets = bofs.crossJoin(broadcast(kdf))
-      .select(col("bkt"), col("boff"), col("bc"), explode(kArr).as("rk"))
-      .select(col("bkt"), col("boff"), col("rk.ri").as("ri"),
-        col("rk.k").as("k"), col("bc"))
-      .where(col("boff") <= col("k") &&
-        col("k") < col("boff") + col("bc"))
-      .select(col("bkt"), col("boff"), col("ri"), col("k"))
+      .select(col("bkt"), col("c_offset"), col("c_total"),
+        explode(kArr).as("rk"))
+      .select(col("bkt"), col("c_offset"), col("rk.ri").as("ri"),
+        col("rk.k").as("k"), col("c_total"))
+      .where(col("c_offset") <= col("k") &&
+        col("k") < col("c_offset") + col("c_total"))
+      .select(col("bkt"), col("c_offset"), col("ri"), col("k"))
     val cum = b.join(broadcast(targets), "bkt")
       .withColumn("cum",
-        col("boff") + sum(col("c")).over(
+        col("c_offset") + sum(col("c")).over(
           Window.partitionBy(col("ri")).orderBy(col("v"))
             .rowsBetween(Window.unboundedPreceding, 0)))
     val aggs = ranks.zipWithIndex.map { case ((name, _), i) =>

@@ -360,7 +360,7 @@ object TextScoring {
     * GD learns the RANKING; the intercept is fit afterward as the exact
     * accuracy-optimal cut over the distinct-score relation (candidates =
     * distinct scores plus the keep-everything sentinel min−1; cumulative
-    * pos/neg counts on the eval_auc two-level prefix-sum machinery; ties
+    * pos/neg counts from [[graft.core.PrefixSum]], as in eval_auc; ties
     * broken toward the smaller cut). That one selection pass replaces
     * dozens of GD rounds the slow-moving bias coordinate would need, and
     * is itself a standard production step (threshold chosen on a
@@ -380,7 +380,6 @@ object TextScoring {
     (s, d) => {
       graft.functions.HashExpressions.register(s)
       import s.implicits._
-      import org.apache.spark.sql.expressions.{Window => W}
       val bx = Tables.documents(s, d)
         .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
         .select(col("doc_id"), expr(s"roll_hash(w) % $QtBuckets").as("b"))
@@ -425,26 +424,9 @@ object TextScoring {
           sum(when(col("y") === -1L, 1L).otherwise(0L)).as("q"))
       val bkts = cnts.withColumn("bkt",
         floor(col("v") / lit(100000.0)).cast("long"))
-      val bofs = bkts.groupBy(col("bkt"))
-        .agg(sum(col("p")).as("bp"), sum(col("q")).as("bq"))
-        .withColumn("offp", coalesce(sum(col("bp")).over(
-          // serial by construction over the ~#buckets offset relation
-          // (the eval_auc machinery; entry is in the plan sweep's
-          // eager-loop skip set, guarded by QualityTrainSpec instead)
-          W.orderBy(col("bkt")).rowsBetween(W.unboundedPreceding, -1)),
-          lit(0L)))
-        .withColumn("offq", coalesce(sum(col("bq")).over(
-          W.orderBy(col("bkt")).rowsBetween(W.unboundedPreceding, -1)),
-          lit(0L)))
-        .select(col("bkt"), col("offp"), col("offq"))
       val tot = cnts.agg(sum(col("p")).as("tp"), min(col("v")).as("minv"))
-      val cum = bkts.join(broadcast(bofs), "bkt")
-        .withColumn("cp", col("offp") + sum(col("p")).over(
-          W.partitionBy(col("bkt")).orderBy(col("v"))
-            .rowsBetween(W.unboundedPreceding, 0)))
-        .withColumn("cq", col("offq") + sum(col("q")).over(
-          W.partitionBy(col("bkt")).orderBy(col("v"))
-            .rowsBetween(W.unboundedPreceding, 0)))
+      val cum = graft.core.PrefixSum.running(bkts, "bkt", "v",
+        Seq("p" -> "cp", "q" -> "cq"))
       val cand = cum.crossJoin(broadcast(tot))
         .select(col("v").as("t"), (col("tp") - col("cp") + col("cq")).as("acc"))
         .unionAll(tot.filter(col("minv").isNotNull)

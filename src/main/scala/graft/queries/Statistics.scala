@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Num, Tables}
-import graft.core.Skew
+import graft.core.{PrefixSum, Skew}
 
 /** Statistical + skew-hygiene queries rounding out the aggregate surface:
   * exact interpolated percentiles, salted two-phase aggregation (identical
@@ -27,7 +27,6 @@ object Statistics {
     * and groups-bounded, broadcast onto the distinct-value relation. */
   val weightedMedianGrouped = QueryDef("stat_weighted_median_grouped",
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val li = Tables.lineitem(s, d)
         .select(col("l_returnflag").as("g"),
           col("l_extendedprice").as("v"),
@@ -40,18 +39,8 @@ object Statistics {
         .transform(graft.core.Cuts.cut)
       val b = pv.withColumn("bkt",
         floor(col("v") / lit(1000.0)).cast("long"))
-      val bofs = b.groupBy(col("g"), col("bkt"))
-        .agg(sum(col("c")).as("bc"))
-        .withColumn("boff",
-          coalesce(sum(col("bc")).over(
-            Window.partitionBy(col("g")).orderBy(col("bkt"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("g"), col("bkt"), col("boff"))
-      val cum = b.join(broadcast(bofs), Seq("g", "bkt"))
-        .withColumn("cum",
-          col("boff") + sum(col("c")).over(
-            Window.partitionBy(col("g"), col("bkt")).orderBy(col("v"))
-              .rowsBetween(Window.unboundedPreceding, 0)))
+      val cum = PrefixSum.running(b, "bkt", "v", Seq("c" -> "cum"),
+        groups = Seq("g"))
       val tot = pv.groupBy(col("g")).agg(sum(col("c")).as("tw"))
       cum.join(broadcast(tot), "g")
         .groupBy(col("g"))
@@ -156,7 +145,7 @@ object Statistics {
           / (1.0 + 1.96 * 1.96 / nd) AS wilson_hi
       FROM f ORDER BY touch_type"""))
 
-  /** Exact WEIGHTED median — the Quantiles two-level selection machinery
+  /** Exact WEIGHTED median — two-level selection on [[graft.core.PrefixSum]]
     * generalized from row counts to weight sums: weighted median price
     * where each lineitem counts `l_quantity` times (the
     * "median price per unit shipped" statistic; the unweighted
@@ -173,7 +162,6 @@ object Statistics {
     * the data-scaled distinct-price relation. */
   val weightedMedian = QueryDef("stat_weighted_median",
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val li = Tables.lineitem(s, d)
         .select(col("l_extendedprice").as("v"),
           col("l_quantity").cast("long").as("w"))
@@ -183,17 +171,7 @@ object Statistics {
         .transform(graft.core.Cuts.cut)
       val b = pv.withColumn("bkt",
         floor(col("v") / lit(1000.0)).cast("long"))
-      val bofs = b.groupBy(col("bkt")).agg(sum(col("c")).as("bc"))
-        .withColumn("boff",
-          coalesce(sum(col("bc")).over(
-            Window.orderBy(col("bkt"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("bkt"), col("boff"))
-      val cum = b.join(broadcast(bofs), "bkt")
-        .withColumn("cum",
-          col("boff") + sum(col("c")).over(
-            Window.partitionBy(col("bkt")).orderBy(col("v"))
-              .rowsBetween(Window.unboundedPreceding, 0)))
+      val cum = PrefixSum.running(b, "bkt", "v", Seq("c" -> "cum"))
       val tot = pv.agg(sum(col("c")).as("tw"))
       cum.crossJoin(broadcast(tot))
         .agg(min(when(col("cum") * 2 >= col("tw"), col("v")))
@@ -218,8 +196,8 @@ object Statistics {
     * the DISTINCT-VALUE relation, which for prices is data-scaled — the
     * one-window spelling that is fine for stat_ks_test's ≤50 quantities
     * is a single-task sort here. So this entry materializes the full
-    * per-value CDF with the Quantiles two-level machinery: the only
-    * serial window crosses the ~#buckets-row bucket-offset relation;
+    * per-value CDF with [[graft.core.PrefixSum]]: the only serial
+    * window crosses the ~#buckets-row bucket-offset relation;
     * per-value cumulative counts then run PARTITIONED BY BUCKET. cdf is
     * one division of exact longs per distinct value (midrank-free: CDF
     * at v = share of rows ≤ v, DuckDB's cume_dist convention). */
@@ -232,20 +210,7 @@ object Statistics {
         .agg(count(lit(1)).as("c"))
         .transform(graft.core.Cuts.cut)
       val b = vc.withColumn("bkt", floor(col("v") / 1000.0).cast("long"))
-      val bofs = b.groupBy(col("bkt")).agg(sum(col("c")).as("bc"))
-        .withColumn("boff", coalesce(
-          sum(col("bc")).over(org.apache.spark.sql.expressions.Window
-            .orderBy(col("bkt"))
-            .rowsBetween(
-              org.apache.spark.sql.expressions.Window.unboundedPreceding,
-              -1)), lit(0L)))
-        .select(col("bkt"), col("boff"))
-      val wIn = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("bkt")).orderBy(col("v"))
-        .rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      b.join(broadcast(bofs), "bkt")
-        .withColumn("cum_n", col("boff") + sum(col("c")).over(wIn))
+      PrefixSum.running(b, "bkt", "v", Seq("c" -> "cum_n"))
         .crossJoin(broadcast(vc.agg(sum(col("c")).as("n_total"))))
         .select(col("v").as("price"), col("c").as("n"), col("cum_n"),
           (col("cum_n").cast("double") / col("n_total").cast("double"))
@@ -1152,32 +1117,23 @@ object Statistics {
     * rank at 100 TB. It doesn't: grouping positions by distinct value v
     * (count c, strictly-smaller count cb) collapses the rank sum in
     * closed form, Σᵢ∈v(2i − n − 1) = c·(2·cb + c − n), so the statistic
-    * is an aggregate over the DISTINCT-VALUE relation with cb from the
-    * Quantiles two-level machinery: the only serial window crosses the
-    * ~#buckets-row bucket-offset relation, per-value exclusive cumsums
-    * run partitioned by bucket. Every term is exact integer arithmetic
+    * is an aggregate over the DISTINCT-VALUE relation with cb from an
+    * exclusive [[graft.core.PrefixSum]]: the only serial window crosses
+    * the ~#buckets-row bucket-offset relation, per-value exclusive
+    * cumsums run partitioned by bucket. Every term is exact integer arithmetic
     * — y·c stays under 2⁶³, the position factor is widened to
     * DECIMAL(38,0) — and G is ONE double division of two exact
     * decimals (VARCHAR-route cast in DuckDB). */
   val gini = QueryDef("stat_gini",
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val spend = Tables.orders(s, d)
         .groupBy(col("o_custkey"))
         .agg((sum(dec(col("o_totalprice"))) * 100).cast("bigint").as("y"))
       val vc = spend.groupBy(col("y")).agg(count(lit(1)).as("c"))
       val b = vc.withColumn("bkt",
         floor(col("y") / lit(10000000L)).cast("long"))
-      val bofs = b.groupBy(col("bkt")).agg(sum(col("c")).as("bc"))
-        .withColumn("boff", coalesce(
-          sum(col("bc")).over(Window.orderBy(col("bkt"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("bkt"), col("boff"))
-      val wIn = Window.partitionBy(col("bkt")).orderBy(col("y"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val cum = b.join(broadcast(bofs), "bkt")
-        .withColumn("cb",
-          col("boff") + coalesce(sum(col("c")).over(wIn), lit(0L)))
+      val cum = PrefixSum.running(b, "bkt", "y", Seq("c" -> "cb"),
+        inclusive = false)
       val tot = spend.agg(count(lit(1)).as("n"), sum(col("y")).as("sy"))
       cum.crossJoin(broadcast(tot))
         .groupBy(col("n"), col("sy"))

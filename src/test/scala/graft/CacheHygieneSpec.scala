@@ -9,18 +9,18 @@ package graft
   * subtree use `localCheckpoint` instead — blocks owned by the RDD and
   * freed by the ContextCleaner on GC (see dedup_minhash_lsh). This spec
   * makes the harnesses' defensive `clearCache()` belt-and-braces rather
-  * than load-bearing. */
+  * than load-bearing. It reads the shared [[CatalogRuns]] pass. */
 class CacheHygieneSpec extends SparkSpec {
 
   test("no catalog query leaves CacheManager entries after construction") {
-    spark.catalog.clearCache()
-    val dir = sf("sf0.001")
-    SparkEntry.queries.foreach { case (name, fn) =>
-      // construction is where a DataFrame-returning fn can call cache();
-      // driver-loop queries (bpe, sssp) run their supersteps here too
-      fn(spark, dir)
-      assert(spark.sharedState.cacheManager.isEmpty,
-        s"$name registered cache entries — library callers would leak them")
+    val runs = CatalogRuns(sf("sf0.001")).narrow.toSeq.sortBy(_._1)
+    val failed = runs.collect { case (name, r) if r.fnError.isDefined =>
+      s"$name: ${r.fnError.get}"
     }
+    assert(failed.isEmpty,
+      s"${failed.size} entries failed to construct:\n${failed.mkString("\n")}")
+    val leaks = runs.collect { case (name, r) if r.cached => name }
+    assert(leaks.isEmpty, s"${leaks.mkString(", ")} registered cache " +
+      "entries — library callers would leak them")
   }
 }

@@ -79,32 +79,30 @@ class CatalogPlanSweepSpec extends SparkSpec {
     "eval_dedup_recall")
 
   /** Entries whose unpartitioned windows are serial BY CONSTRUCTION:
-    * `Quantiles.valueAtRanks` bucket offsets (stat_mad chains two
-    * selections + a deviation pass, stat_winsorized one) — windows over
-    * the ~B-row bucket relation, never the data; `pack_sequences`' level-2
-    * offsets over its ≤ P-row (shuffle-parallelism-bounded) bucket
-    * relation; `q42_moving_range`'s frame
-    * over calendar-bounded daily aggregates; `sql_text_surface`'s rank
-    * over a 25-nation aggregate (its SQL text must stay char-identical in
-    * both engines, so no Spark-side rewrite is possible). */
+    * `core.PrefixSum` bucket offsets — windows over the bucket relation,
+    * never the data; `q42_moving_range`'s frame over calendar-bounded
+    * daily aggregates; `sql_text_surface`'s rank over a 25-nation
+    * aggregate (its SQL text must stay char-identical in both engines,
+    * so no Spark-side rewrite is possible). */
   private val serialWindowsByConstruction = Set(
+    // core.PrefixSum offsets, directly or through
+    // Quantiles.valueAtRanksCounts: the only unpartitioned window runs
+    // over the bucket relation, which stays small because buckets are a
+    // fixed width over a bounded value range (prices, spend, scores,
+    // latencies) or, in packCounts, doc_id ranges ≤ P = shuffle
+    // parallelism; per-row running sums are bucket-partitioned
     "stat_mad", "stat_winsorized", "pack_sequences",
-    // nine decile edges from one valueAtRanks pass: same ~B-row bucket
-    // relation windows as stat_mad/stat_winsorized
     "stat_equidepth_histogram",
-    // full-CDF materialization: the serial window crosses only the
-    // bucket-offset relation; per-value cumsums are bucket-partitioned
     "stat_rank_normalize",
-    // weighted selection over the same machinery: serial window only on
-    // the bucket-offset relation, per-value cumulative WEIGHTS
-    // bucket-partitioned
     "stat_weighted_median",
+    "pipeline_curation_e2e",
+    "stat_gini",
+    "ev_funnel_latency",
+    "eval_auc",
+    "ev_lorenz_users",
     // growth-curve running sum over the calendar-bounded day spine
     // (~30 rows) — the q42_moving_range class
     "ev_cumulative_users",
-    // the e2e pipeline ends in the same packCounts level-2 offsets
-    // (≤ P-row bucket relation)
-    "pipeline_curation_e2e",
     "q42_moving_range", "sql_text_surface",
     // rank windows run over the LIMIT-50 candidate relations (each leg is
     // a TakeOrderedAndProject top-Nc first; ≤ 2·Nc rows at any scale)
@@ -114,23 +112,9 @@ class CatalogPlanSweepSpec extends SparkSpec {
     "stat_ks_test",
     // same distinct-value cumulative-rank window as stat_ks_test
     "stat_mann_whitney",
-    // Gini: the serial window crosses only the ~#buckets-row
-    // bucket-offset relation (the stat_rank_normalize machinery);
-    // per-value exclusive cumsums are bucket-partitioned
-    "stat_gini",
     // rank window over the LIMIT-100 top-words relation
     // (TakeOrderedAndProject first — bounded at any corpus size)
     "text_zipf_fit",
-    // conversion-latency order statistics via valueAtRanks: serial
-    // window only on the ~#buckets offset relation (stat_mad machinery)
-    "ev_funnel_latency",
-    // AUC midranks via the same two-level prefix sum: serial window
-    // crosses only the bucket-offset relation; per-value cumulative
-    // counts are bucket-partitioned
-    "eval_auc",
-    // Lorenz deciles: the only serial window is valueAtRanks' bucket
-    // offsets over the per-user-spend bucket relation
-    "ev_lorenz_users",
     // KM risk-set cumsum over the age relation — ≤ KmHorizon+1 rows
     // BY CONSTRUCTION (ages are clamped to the fixed follow-up window)
     "ev_survival_km",
@@ -152,6 +136,26 @@ class CatalogPlanSweepSpec extends SparkSpec {
     * hints so AQE's runtime stats broadcast them only while they are
     * actually small.) */
   private val boundedBroadcastsByReview: Map[String, Seq[String]] = Map(
+    // core.PrefixSum offsets, directly or through
+    // Quantiles.valueAtRanksCounts: one row per (group ×) bucket, and the
+    // bucket relation stays small because buckets are a fixed width over
+    // a bounded value range (prices, spend, scores, latencies) or, in
+    // packCounts, doc_id ranges ≤ P = shuffle parallelism. The weighted
+    // medians also broadcast their totals: global, or per returnflag
+    // (3 groups).
+    "pack_sequences" -> Seq("agg[bucket]<-[documents]"),
+    "pipeline_curation_e2e" -> Seq("agg[bucket]<-[documents]"),
+    "stat_mad" -> Seq("agg[bkt]<-[lineitem]"),
+    "stat_winsorized" -> Seq("agg[bkt]<-[lineitem]"),
+    "stat_gini" -> Seq("agg[bkt]<-[orders]"),
+    "stat_equidepth_histogram" -> Seq("agg[bkt]<-[lineitem]"),
+    "stat_rank_normalize" -> Seq("agg[bkt]<-[lineitem]"),
+    "eval_auc" -> Seq("agg[bkt]<-[documents]"),
+    "ev_funnel_latency" -> Seq("agg[bkt]<-[events]"),
+    "ev_lorenz_users" -> Seq("agg[bkt]<-[events]"),
+    "stat_weighted_median" -> Seq("agg[bkt]<-[lineitem]", "agg[-]<-[lineitem]"),
+    "stat_weighted_median_grouped" ->
+      Seq("agg[g,bkt]<-[lineitem]", "agg[g]<-[lineitem]"),
     // Misra–Gries candidate relation: ≤ shards·K rows at ANY corpus size
     // (each shard's GroupState holds at most K counters — the sketch
     // never grows; StreamingSpec pins the state-size bound)
@@ -181,23 +185,8 @@ class CatalogPlanSweepSpec extends SparkSpec {
     // LOCF carry offsets: one row per (series × hour bucket) — series set
     // is the declared few-fat-series shape, hours are calendar-bounded
     "ev_resample_locf_fat" -> Seq("agg[event_type,bkt]<-[events]"),
-    // bucket offsets: ≤ P rows, P = cluster parallelism by construction
-    "pack_sequences" -> Seq("agg[bucket]<-[documents]"),
-    // same packCounts bucket-offset broadcast at the e2e pipeline's tail
-    "pipeline_curation_e2e" -> Seq("agg[bucket]<-[documents]"),
     // iterative-narrowing state: ≤ 2 rows per (group × active rank)
     "q23_percentiles" -> Seq("agg["),
-    // Quantiles bucket-offset relation: B fixed buckets
-    "stat_mad" -> Seq("agg[bkt]<-[lineitem]"),
-    "stat_winsorized" -> Seq("agg[bkt]<-[lineitem]"),
-    // Gini bucket-offset relation: ~#buckets rows (value-range bounded);
-    // the totals broadcast is a global aggregate (bounded witness)
-    "stat_gini" -> Seq("agg[bkt]<-[orders]"),
-    "stat_equidepth_histogram" -> Seq("agg[bkt]<-[lineitem]"),
-    "stat_rank_normalize" -> Seq("agg[bkt]<-[lineitem]"),
-    // AUC midrank machinery: same Quantiles bucket-offset relation —
-    // ~(score range / 0.01) buckets over the [0, ~1.05] quality score
-    "eval_auc" -> Seq("agg[bkt]<-[documents]"),
     // isotonic recalibration: every broadcast is the ≤10-row fixed-width
     // score-bin relation or a ≤55-row contiguous-run relation derived
     // from it (bins are value-range bounded: score ∈ [0, ~1.05] → 10
@@ -208,17 +197,6 @@ class CatalogPlanSweepSpec extends SparkSpec {
     // (and the run relations inside it) back onto the documents scan
     "curate_keep_calibrated" -> Seq("agg[bin]<-[documents]",
       "agg[j,k]<-[documents]"),
-    // conversion-latency selection: bucket offsets over the 1e10-µs-wide
-    // latency buckets (range-bounded by the corpus time span)
-    "ev_funnel_latency" -> Seq("agg[bkt]<-[events]"),
-    // Lorenz deciles: valueAtRanks bucket offsets over per-user spend
-    // (value-range bounded at width 100)
-    "ev_lorenz_users" -> Seq("agg[bkt]<-[events]"),
-    "stat_weighted_median" -> Seq("agg[bkt]<-[lineitem]", "agg[-]<-[lineitem]"),
-    // grouped twin: offsets are (groups × buckets)-bounded, totals
-    // groups-bounded (returnflag cardinality 3)
-    "stat_weighted_median_grouped" ->
-      Seq("agg[g,bkt]<-[lineitem]", "agg[g]<-[lineitem]"),
     // ntile bucket counts/offsets: B fixed buckets
     "q37_ntile" -> Seq("agg[bkt]<-[customer]"),
     // language signature profile: rank ≤ 10 filter keeps ≤ 10 words per

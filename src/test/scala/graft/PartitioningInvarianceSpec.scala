@@ -19,27 +19,14 @@ package graft
   * of the contract — the driver's gate compares in emitted order).
   * `text_bpe_*` results are memoized per (session, dir), so this spec
   * cannot detect layout sensitivity inside the BPE merge loop; BpeSpec's
-  * oracle equality covers that path. */
+  * oracle equality covers that path. The rows come from the shared
+  * [[CatalogRuns]] pass. */
 class PartitioningInvarianceSpec extends SparkSpec {
 
-  private def runAll(parts: Int): Map[String, Seq[String]] = {
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try {
-      graft.queries.Registry.all.map { q =>
-        val rows =
-          try q.fn(spark, sf("sf0.001")).collect().map(_.toString).toSeq
-          catch {
-            case e: Throwable =>
-              Seq(s"ERROR ${e.getClass.getSimpleName}: ${e.getMessage}")
-          }
-        q.name -> rows
-      }.toMap
-    } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
-  }
-
   test("every catalog entry emits identical rows at 3 and 32 shuffle partitions") {
-    val narrow = runAll(3)
-    val wide = runAll(32)
+    val pass = CatalogRuns(sf("sf0.001"))
+    val narrow = pass.narrow.map { case (n, r) => n -> r.rows }
+    val wide = pass.wide.map { case (n, r) => n -> r.rows }
     // an entry that throws the SAME layout-independent exception in both
     // runs would otherwise pass silently — execution failure is a failure
     // of this sweep too, not just a matching pair of ERROR rows
