@@ -1,28 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection tool: `sbt "runMain graft.Explain [queryName ...]"`
-  * prints the formatted physical plan for the named queries (default: a
-  * representative set) against SPARK_GRAFT_SF_DIR. Used to keep plans
+  * prints the formatted physical plan for the named queries (default:
+  * [[Defaults]]) against SPARK_GRAFT_SF_DIR. Used to keep plans
   * honest: filters pushed to the parquet scan, small dims broadcast, wide
   * WholeStageCodegen spans. */
 object Explain {
+  /** Plans printed when no name is given. */
+  val Defaults: Seq[String] = Seq("q2_filter_project", "q5_region_revenue",
+    "q1_pricing_summary", "dedup_embedding_cosine", "sim_topk_bruteforce")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val names =
-      if (args.nonEmpty) args.toSeq
-      else Seq("q2_filter_project", "q5_region_revenue", "q1_pricing_summary",
-        "dedup_embedding_cosine", "sim_topk_bruteforce")
+    val spark = Local.session()
+    val names = if (args.nonEmpty) args.toSeq else Defaults
     val fns = SparkEntry.queries
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -233,8 +233,6 @@ object ShortestPath {
     // when the whole graph is a few MB; at numParts == conf the plan is
     // byte-identical to the map-side-combining groupBy spelling below.
     val compact = numParts < conf
-    if (sys.env.contains("SSSP_DEBUG"))
-      System.err.println(s"[sssp] estBytes=$estBytes conf=$conf numParts=$numParts compact=$compact")
     // compact regime: the loop's partitioning is fully pinned, so
     // adaptive execution has nothing to improve — but it (a) decomposes
     // each batch action into one job PER SHUFFLE STAGE with a driver
@@ -325,9 +323,6 @@ object ShortestPath {
           least(col("cur"), col("cand")).as("dist"),
           (col("cur").isNull || col("cand") < col("cur")).as("improved"))
       val folded = cutLineage(foldPlan)
-      if (sys.env.contains("SSSP_DEBUG"))
-        System.err.println(s"[sssp] folded parts=${folded.rdd.getNumPartitions}" +
-          s" levelParts=${levels.map(_.rdd.getNumPartitions).mkString(",")}")
       active = folded.where(col("improved")).count()
       if (usePersist) levels.foreach(_.unpersist(false)) // folded checkpointed
       frontier = folded.where(col("improved")).select(col("node"), col("dist"))

@@ -271,14 +271,6 @@ object Dedup {
     },
     substringIncremental.oracle)
 
-  /** [[substringProbe]] against a STORED window-hash index table —
-    * the probe half of `dedup_substring_stored` as a library entry
-    * point, reused by the multi-day incremental pipeline
-    * ([[PipelineE2E.pipelineIncrementalE2E]]). */
-  def substringProbeStored(batchDocs: DataFrame, idxTable: String,
-      W: Int): DataFrame =
-    spanReport(probeFlagsStored(batchDocs, idxTable, W), W)
-
   /** [[probeFlags]] against a STORED window-hash index table: the
     * batch side is tokenized/windowed here; the index side costs one
     * bucketed table read. */
@@ -307,8 +299,10 @@ object Dedup {
       .withColumn("gh", rollHash("col"))
       .select(col("doc_id"), col("pos0").as("pos"), col("gh"))
 
-  /** [[substringProbeStored]] from precomputed tokenized (`tok`) and
-    * window-hash (`bw`) frames — the multi-day pipeline's span probe. */
+  /** [[substringProbe]] against a STORED window-hash index table, from
+    * precomputed tokenized (`tok`) and window-hash (`bw`) frames — the
+    * multi-day pipeline's span probe
+    * ([[PipelineE2E.pipelineIncrementalE2E]]). */
   private[graft] def substringProbeStoredFromWindows(tok: DataFrame,
       bw: DataFrame, idxTable: String, W: Int): DataFrame = {
     val s = tok.sparkSession

@@ -46,15 +46,11 @@ object PipelineE2E {
         .otherwise(0L))
 
   /** `text_quality`'s exact score + `curate_keep_calibrated`'s exact
-    * bin/label assignment over an arbitrary document frame — factored
-    * so the pipeline's per-day scoring cannot drift from the cataloged
-    * single-shot entries (same expression trees, bit-identical). */
-  private[operators] def scoredOf(docs: DataFrame): DataFrame =
-    scoredOfTok(docs.withColumn("t", tokens(col("text"))))
-
-  /** [[scoredOf]] from an already-tokenized `(doc_id, t)` frame —
-    * identical expression tree from `t` onward (the pipeline tokenizes
-    * each batch once and shares `t` across all per-doc derivations). */
+    * bin/label assignment over an already-tokenized `(doc_id, t)` frame —
+    * factored so the pipeline's per-day scoring cannot drift from the
+    * cataloged single-shot entries (same expression trees from `t`
+    * onward, bit-identical; the pipeline tokenizes each batch once and
+    * shares `t` across all per-doc derivations). */
   private[operators] def scoredOfTok(tok: DataFrame): DataFrame =
     tok
       .withColumn("n_tokens", size(col("t")).cast("long"))
@@ -167,7 +163,7 @@ object PipelineE2E {
     * decontaminate (semi-join the bench store) → near-dup dedup
     * ([[Dedup.crossPairsStored]] vs the band index, plus
     * [[Dedup.minhashPairs]] within the batch) → span probe
-    * ([[Dedup.substringProbeStored]] vs the window-hash store) →
+    * ([[Dedup.substringProbeStoredFromWindows]] vs the window-hash store) →
     * calibrated keep gate (broadcast the ≤10-row cal store). First
     * failing check names the reason, `corpus_keep_filter`'s audit
     * convention. EAGERLY checkpointed: the caller appends to the very

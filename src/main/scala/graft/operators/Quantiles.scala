@@ -184,7 +184,8 @@ object Quantiles {
     // shape, never by the data — yet the distributed spelling pays per
     // round an eager localCheckpoint job, an isEmpty probe job, a
     // broadcast build and a windowed locate join, all driver-
-    // synchronized (FnSplit: q23 fn=1.6 s for ~0.9 s of executor work).
+    // synchronized (distributed path, TimeQuery's fn/action split: q23
+    // fn=1.6 s for ~0.9 s of executor work).
     // Up to [[LocalStates]] states ([[graft.core.Hybrid]]) the loop keeps
     // its state in a driver array: each round is then ONE distributed job
     // (the histogram aggregate, whose output is ≤ buckets × states rows

@@ -892,8 +892,8 @@ object Similarity {
   /** r17 hybrid cutover for the kNN-graph family ([[graft.core.Hybrid]]):
     * at sf-tier corpus sizes (2000 vectors at sf0.1) the LSH self-join +
     * NN-descent plans cost seconds of per-stage scheduling and
-    * plan-build (FnSplit: emb_knn_graph_refined fn=3.3 s for ~0.2 s of
-    * executor work) around milliseconds of real arithmetic. Up to this
+    * plan-build (distributed path, TimeQuery's fn/action split:
+    * emb_knn_graph_refined fn=3.3 s for ~0.2 s of executor work) around milliseconds of real arithmetic. Up to this
     * many embedding rows the class-collapse + norm + bucket hashes still
     * run DISTRIBUTED (one collect job — the hash/norm expressions are
     * never duplicated), and the pair join, cosine scoring and

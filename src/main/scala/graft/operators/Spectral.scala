@@ -47,8 +47,8 @@ object Spectral {
   /** r17 hybrid cutover for the spectral family ([[graft.core.Hybrid]]):
     * at sf-tier corpus sizes each training round is two shuffle jobs
     * plus a driver collect around microseconds of integer arithmetic
-    * (FnSplit: emb_spectral_map fn=1.7 s for ~0.2 s of executor work;
-    * the map runs SIX rounds). Up to this many embedding rows the
+    * (distributed path, TimeQuery's fn/action split: emb_spectral_map
+    * fn=1.7 s for ~0.2 s of executor work; the map runs SIX rounds). Up to this many embedding rows the
     * quantized vectors are collected ONCE (one job, the same quantize
     * expression) and the rounds run as a driver loop in the identical
     * exact-BIGINT arithmetic — bit-equal BY CONSTRUCTION (integer sums

@@ -41,9 +41,10 @@ object Triangles {
     * deterministic edge generation, which reads no input) runs on the
     * driver in exact integer arithmetic. The r16 PERF scaling block
     * measured this family FASTER at 8 cores than 32 — fixed per-stage
-    * cost, not data — and the r17 PageRank decomposition (BenchProbe +
-    * FnSplit, OPTIMIZATION_r17.md) located that cost in driver-side
-    * planning/scheduling of multi-join plans over ~3 k generated rows.
+    * cost, not data — and the r17 PageRank decomposition (job traces and
+    * fn/action splits, both printed by TimeQuery; OPTIMIZATION_r17.md)
+    * located that cost in driver-side planning/scheduling of multi-join
+    * plans over ~3 k generated rows.
     * Exact-integer combinatorics make the two paths bit-identical BY
     * CONSTRUCTION; HybridEquivalenceSpec pins every entry's local path
     * against its distributed plan row-by-row, and the DuckDB oracle

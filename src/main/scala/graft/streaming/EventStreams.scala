@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
@@ -137,12 +137,6 @@ object EventStreams {
         col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR"))
       .select(col("user_id"), col("p_ts"), col("c_ts"), col("value"))
   }
-
-  /** Demo entry point: replays the batch events table through a streaming
-    * query (file source would be used in production; here the batch DF
-    * demonstrates the shared transformation). */
-  def runBatchAsStream(spark: SparkSession, sfDir: String): DataFrame =
-    windowedCounts(graft.Tables.events(spark, sfDir))
 
   case class EvId(event_id: Long, ts: Timestamp, user_id: Long,
       event_type: String, value: Option[Double])

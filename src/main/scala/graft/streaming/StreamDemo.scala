@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
@@ -9,13 +8,7 @@ import java.sql.Timestamp
   * prints the sinks. Run: `sbt "runMain graft.streaming.StreamDemo"`. */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Local.session()
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import EventStreams.{Ev, Session}

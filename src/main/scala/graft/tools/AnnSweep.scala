@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Local, Tables}
 
 /** Recall/latency trade-off sweep for the IVF-PQ composite index
   * (`emb_ivfpq_topk`): nprobe ∈ {1,2,4} × shortlist ∈ {20,50,100} against
@@ -11,8 +10,9 @@ import graft.Tables
   *
   * recall@10 is measured against the exact brute-force top-10 for the
   * same query (vec_id 0, squared-L2 ascending, ties on id — identical
-  * conventions to the entry's re-rank stage). Timing is one warmed pass
-  * per configuration; these are tuning-table numbers, not gate numbers.
+  * conventions to the entry's re-rank stage). Timing is the min of
+  * [[graft.Local.timed]]'s passes per configuration; these are
+  * tuning-table numbers, not gate numbers.
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *   sbt "runMain graft.tools.AnnSweep [mult ...]"    (default: 8 64)
@@ -22,21 +22,11 @@ object AnnSweep {
   def main(args: Array[String]): Unit = {
     val mults = if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(8, 64)
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Local.session()
     graft.functions.VectorFunctions.register(spark)
 
     val out = mults.map { mult =>
-      val srcKey = src.replaceAll("[^A-Za-z0-9.]", "_")
-      val dir = s"/tmp/graft_scale_${srcKey}_x$mult"
-      ScaleSmoke.buildScaledDir(spark, src, dir, mult)
+      val dir = ScaleSmoke.scaledDir(spark, src, mult)
       // ground truth: exact top-10 for query 0 over everything else
       val e = Tables.embeddings(spark, dir)
         .select(col("vec_id"),
@@ -54,13 +44,12 @@ object AnnSweep {
         nprobe <- Seq(1, 2, 4)
         shortlist <- Seq(20, 50, 100)
       } yield {
-        def run() = graft.operators.Semantic
-          .ivfPqSearch(spark, dir, nprobe, shortlist)
-          .collect().map(_.getLong(0)).toSet
-        run() // warm-up (JIT + page cache), result discarded
-        val t0 = System.nanoTime()
-        val got = run()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val runs = Local.timed(spark) {
+          graft.operators.Semantic.ivfPqSearch(spark, dir, nprobe, shortlist)
+            .collect().map(_.getLong(0)).toSet
+        }
+        val sec = runs.map(_._1).min
+        val got = runs.last._2
         val recall = (got & truth).size / 10.0
         System.err.println(
           f"[ann] x$mult nprobe=$nprobe shortlist=$shortlist " +

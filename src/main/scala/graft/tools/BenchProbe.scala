@@ -1,19 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{Local, SparkEntry}
 
-/** Bench-context degradation probe (r16 measurement tooling): TimeQuery
-  * measures a query in a FRESH session, the bench measures it after 261
-  * other queries ran in the same JVM — and the two disagree badly
-  * (sssp_synthetic 2.3 s fresh vs 8.3 s in-bench at HEAD r16). This tool
-  * reproduces the bench context (one warm-up pass over the whole bench
-  * set, same session config) and then times the probe queries, so
-  * session-level knobs can be A/B'd via env:
-  *
-  *   SPARK_GRAFT_CODEGEN_CACHE  — spark.sql.codegen.cache.maxEntries
-  *                                 (unset = Spark default 100)
-  *   SPARK_GRAFT_PROBE_WARM=0   — skip the catalog warm-up (control:
-  *                                 numbers should match TimeQuery)
+/** Bench-context probe: TimeQuery measures a query in a FRESH session,
+  * the bench measures it after every other bench query ran in the same
+  * JVM — and the two can disagree badly (sssp_synthetic 2.3 s fresh vs
+  * 8.3 s in-bench at r16). This tool reproduces the bench context (one
+  * untimed pass over the whole bench set in the bench's session) and then
+  * runs TimeQuery's timing of the named queries.
   *
   * Usage: sbt "runMain graft.tools.BenchProbe q1 q2 ..."
   */
@@ -21,49 +15,10 @@ object BenchProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: BenchProbe <queryName> [queryName ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        if (sys.env.getOrElse("SPARK_GRAFT_PROBE_AQE", "1") == "1") "true"
-        else "false")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CODEGEN_CACHE").foreach(v =>
-      b.config("spark.sql.codegen.cache.maxEntries", v))
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // per-job wall + gap trace (SPARK_GRAFT_PROBE_JOBS=1): where a
-    // multi-stage tiny-data query's wall time actually goes — executor
-    // task time vs the driver-side gaps between consecutive jobs
-    if (sys.env.getOrElse("SPARK_GRAFT_PROBE_JOBS", "0") == "1") {
-      val lastEnd = new java.util.concurrent.atomic.AtomicLong(0L)
-      val t0s = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            val now = System.nanoTime()
-            t0s.put(j.jobId, now)
-            val gap = if (lastEnd.get == 0) 0.0 else (now - lastEnd.get) / 1e6
-            System.err.println(
-              f"[jobs] job ${j.jobId}%4d START gap=${gap}%7.1f ms stages=${j.stageInfos.size}")
-          }
-          override def onJobEnd(
-              j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val now = System.nanoTime()
-            lastEnd.set(now)
-            val w = Option(t0s.get(j.jobId)).map(t => (now - t) / 1e6).getOrElse(-1.0)
-            System.err.println(f"[jobs] job ${j.jobId}%4d END   wall=${w}%7.1f ms")
-          }
-        })
-    }
-    val fns = graft.SparkEntry.queries
-    val warm = sys.env.getOrElse("SPARK_GRAFT_PROBE_WARM", "1") == "1"
+    val spark = Local.session()
+    val fns = SparkEntry.queries
     val t0 = System.nanoTime()
-    if (warm) graft.SparkEntry.benchQueries.foreach { name =>
+    SparkEntry.benchQueries.foreach { name =>
       try fns(name)(spark, sfDir).write.mode("overwrite")
         .format("noop").save()
       catch { case t: Throwable =>
@@ -73,17 +28,7 @@ object BenchProbe {
       f"[probe] warmup ${(System.nanoTime() - t0) / 1e9}%.1f s")
     System.gc()
     spark.catalog.clearCache()
-    args.foreach { n =>
-      val runs = Seq.fill(2) {
-        val t1 = System.nanoTime()
-        fns(n)(spark, sfDir).write.mode("overwrite").format("noop").save()
-        val sec = (System.nanoTime() - t1) / 1e9
-        spark.catalog.clearCache()
-        sec
-      }
-      println(f"PROBE $n%-28s min=${runs.min}%.3f runs=${runs.map(r => f"$r%.2f").mkString(",")} " +
-        s"cache=${sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "default")} warm=$warm")
-    }
+    TimeQuery.run(spark, sfDir, args.toSeq)
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import graft.Local
 import graft.core.FirebirdCompat
 import scala.util.Random
 
@@ -25,10 +26,7 @@ object CompatDemo {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Local.session()
 
     val rnd = new Random(1000)                      // ≅ srand(1000)
     val ints = Seq.fill(1000000)(rnd.nextInt(100))  // ≅ gen_ints

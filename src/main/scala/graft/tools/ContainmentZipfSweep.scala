@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Local
 import graft.operators.Dedup
 
 /** Measures `dedup_containment`'s prefix-filter selectivity on a corpus
@@ -88,15 +89,7 @@ object ContainmentZipfSweep {
     val rest = if (heaps) args.drop(1).toSeq else args.toSeq
     val tiers = if (rest.nonEmpty) rest.map(_.toLong)
       else Seq(60000L, 150000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Local.session()
     val tau = 0.8
     tiers.foreach { n =>
       val docs = (if (heaps) corpusHeaps(spark, n) else corpus(spark, n))
@@ -114,16 +107,10 @@ object ContainmentZipfSweep {
       val flagged = Dedup.containmentOf(docs, tau)
         .where(col("doc_id") >= n).count()
       val planted = (n + 3) / 4
-      def once(): Double = {
-        val t0 = System.nanoTime()
+      val best = Local.timed(spark) {
         Dedup.containmentOf(docs, tau)
           .write.mode("overwrite").format("noop").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        sec
-      }
-      once() // warm-up
-      val best = Seq.fill(3)(once()).min
+      }.map(_._1).min
       println(f"${if (heaps) "HEAPS" else "ZIPFC"} n=$nDocs%d classes=$nClasses%d " +
         f"all_pairs=$allPairs%d candidates=$nCand%d " +
         f"selectivity=${nCand.toDouble / allPairs.toDouble}%.2e " +

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{Local, SparkEntry}
 
 /** High-tier timings for the pair-output dedup family on the
   * MUTATED-replica corpus ([[ScaleSmoke.buildMutatedDir]] — r12 verdict
@@ -26,34 +25,17 @@ object DedupTier {
   def main(args: Array[String]): Unit = {
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(8, 64, 512)
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Local.session()
     val fns = SparkEntry.queries
     // SPARK_GRAFT_ONLY=a,b restricts the sweep (the Verify convention)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val entries = Entries.filter(n => only.forall(_.contains(n)))
+    val entries = Entries.filter(Local.selects)
     mults.foreach { mult =>
-      val srcKey = src.replaceAll("[^A-Za-z0-9.]", "_")
-      val dir = s"/tmp/graft_mutated_${srcKey}_x$mult"
+      val dir = ScaleSmoke.tierDir("mutated", src, mult)
       ScaleSmoke.buildMutatedDir(spark, src, dir, mult)
       entries.foreach { n =>
         val fn = fns(n)
-        fn(spark, dir).write.mode("overwrite").format("noop").save() // warm-up
-        spark.catalog.clearCache()
-        val runs = Seq.fill(3) {
-          val t0 = System.nanoTime()
-          fn(spark, dir).write.mode("overwrite").format("noop").save()
-          val el = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          el
-        }
+        val runs = Local.timed(spark)(fn(spark, dir).write.mode("overwrite")
+          .format("noop").save()).map(_._1)
         val rows = fn(spark, dir).count()
         spark.catalog.clearCache()
         println(f"MUTDUP x$mult%-4d $n%-22s min=${runs.min}%8.3f rows=$rows")

@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Local, Tables}
 import graft.operators.{Components, Dedup}
 
 /** Measures the claim `components_incremental_stored` exists to make:
@@ -35,15 +34,7 @@ object IncrementalSweep {
   def main(args: Array[String]): Unit = {
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 8)
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Local.session()
 
     val isBatch = col("doc_id") % 8 === 7
     // the FIXED ingest: sf0.1's batch slice, identical at every tier
@@ -51,14 +42,7 @@ object IncrementalSweep {
       .localCheckpoint(false)
 
     mults.foreach { mult =>
-      val dir =
-        if (mult == 1) src
-        else {
-          val srcKey = src.replaceAll("[^A-Za-z0-9.]", "_")
-          val d = s"/tmp/graft_scale_${srcKey}_x$mult"
-          ScaleSmoke.buildScaledDir(spark, src, d, mult)
-          d
-        }
+      val dir = ScaleSmoke.scaledDir(spark, src, mult)
       val oldDocs = Tables.documents(spark, dir).filter(!isBatch)
       val base = Dedup.sinkBase(dir)
 
@@ -73,8 +57,7 @@ object IncrementalSweep {
       val bootstrapSec = (System.nanoTime() - b0) / 1e9
       spark.catalog.clearCache()
 
-      def steadyOnce(): Double = {
-        val t0 = System.nanoTime()
+      val runs = Local.timed(spark) {
         val stored = spark.table("graft_comp_labels")
         val newEdges = Dedup.minhashPairs(batch).select(col("a"), col("b"))
           .unionAll(Dedup.crossPairsStored(batch,
@@ -82,12 +65,7 @@ object IncrementalSweep {
             .select(col("a"), col("b")))
         Components.incrementalLabels(stored, newEdges)
           .write.mode("overwrite").format("noop").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        sec
-      }
-      steadyOnce() // warm-up
-      val runs = Seq.fill(3)(steadyOnce()).sorted
+      }.map(_._1).sorted
       println(f"""{"metric":"incremental_x$mult%d","bootstrap_sec":$bootstrapSec%.3f,"steady_min_sec":${runs.head}%.3f,"steady_median_sec":${runs(1)}%.3f,"batch_docs":${batch.count()}%d}""")
     }
     spark.stop()

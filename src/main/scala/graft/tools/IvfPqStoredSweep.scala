@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Local
 import graft.operators.Semantic
 
 /** Separates `emb_ivfpq_stored`'s two phases the way a deployment pays
@@ -19,40 +19,19 @@ object IvfPqStoredSweep {
   def main(args: Array[String]): Unit = {
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 8)
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Local.session()
 
     mults.foreach { mult =>
-      val dir =
-        if (mult == 1) src
-        else {
-          val srcKey = src.replaceAll("[^A-Za-z0-9.]", "_")
-          val d = s"/tmp/graft_scale_${srcKey}_x$mult"
-          ScaleSmoke.buildScaledDir(spark, src, d, mult)
-          d
-        }
+      val dir = ScaleSmoke.scaledDir(spark, src, mult)
       val t0 = System.nanoTime()
       Semantic.writeIvfPqIndexTables(spark, dir)
       val trainSec = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
 
-      def searchOnce(): Double = {
-        val s0 = System.nanoTime()
+      val runs = Local.timed(spark) {
         Semantic.ivfPqSearchStored(spark, dir, Semantic.IvfPqNProbe, 50)
           .write.mode("overwrite").format("noop").save()
-        val sec = (System.nanoTime() - s0) / 1e9
-        spark.catalog.clearCache()
-        sec
-      }
-      searchOnce() // warm-up
-      val runs = Seq.fill(3)(searchOnce()).sorted
+      }.map(_._1).sorted
       println(f"""{"metric":"ivfpq_stored_x$mult%d","train_sec":$trainSec%.3f,"search_min_sec":${runs.head}%.3f,"search_median_sec":${runs(1)}%.3f}""")
     }
     spark.stop()

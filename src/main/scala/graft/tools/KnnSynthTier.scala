@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Local
 
 /** Synthetic-embedding corpus generator for the NN-descent scale
   * experiment: ScaleSmoke's replica corpora collapse into the SAME
@@ -20,13 +20,7 @@ import org.apache.spark.sql.functions._
 object KnnSynthTier {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: KnnSynthTier n1 [n2 ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Local.session()
     args.map(_.toLong).foreach { n =>
       val dir = s"/tmp/graft_knn_synth_n$n"
       spark.range(0, n, 1, 32)

@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Local, Tables}
 import graft.operators.{Dedup, PipelineE2E}
 
 /** Measures `pipeline_incremental_e2e`'s steady-state claim: per-day
@@ -36,15 +35,7 @@ object PipelineSweep {
   def main(args: Array[String]): Unit = {
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 8)
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Local.session()
 
     // the FIXED ingests: the source dir's three day slices, identical at
     // every tier
@@ -81,15 +72,7 @@ object PipelineSweep {
     // JIT warm-up at 1×, unreported
     runTier(src, "warmup", report = false)
     mults.foreach { mult =>
-      val dir =
-        if (mult == 1) src
-        else {
-          val srcKey = src.replaceAll("[^A-Za-z0-9.]", "_")
-          val d = s"/tmp/graft_scale_${srcKey}_x$mult"
-          ScaleSmoke.buildScaledDir(spark, src, d, mult)
-          d
-        }
-      runTier(dir, s"x$mult", report = true)
+      runTier(ScaleSmoke.scaledDir(spark, src, mult), s"x$mult", report = true)
     }
     spark.stop()
   }

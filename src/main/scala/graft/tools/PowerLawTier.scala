@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Local
 import graft.operators.{KCore, Triangles}
 
 /** Graph-family scale tiers on the POWER-LAW fixture (round-11 verdict
@@ -20,24 +20,12 @@ object PowerLawTier {
   def main(args: Array[String]): Unit = {
     val ns = if (args.nonEmpty) args.map(_.toLong).toSeq
       else Seq(100000L, 400000L, 1600000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Local.session()
     ns.foreach { n =>
       val simple = Triangles.powerLawEdges(spark, n).localCheckpoint()
       val m = simple.count()
       def time(label: String)(f: => Long): Unit = {
-        f // warm-up
-        val runs = Seq.fill(3) {
-          val t0 = System.nanoTime()
-          val r = f
-          ((System.nanoTime() - t0) / 1e9, r)
-        }
+        val runs = Local.timed(spark)(f)
         val best = runs.map(_._1).min
         println(f"PLAW n=$n%-9d m=$m%-9d $label%-12s min=$best%.3f result=${runs.head._2}")
       }
@@ -78,7 +66,6 @@ object PowerLawTier {
         }
         lab.select(countDistinct(col("l"))).head().getLong(0)
       }
-      spark.catalog.clearCache()
     }
     spark.stop()
   }

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{SparkEntry, Tables}
+import graft.{Local, SparkEntry, Tables}
 
 /** Scale-up smoke: replicate the sf0.1 tables `mult`× (with key offsets so
   * cardinalities really grow), write them as a synthetic scale-factor
@@ -19,11 +19,9 @@ import graft.{SparkEntry, Tables}
   */
 object ScaleSmoke {
 
-  def main(args: Array[String]): Unit = {
-    val mult = args.headOption.map(_.toInt).getOrElse(8)
-    val queries =
-      if (args.length > 1) args.drop(1).toSeq
-      else Seq("q1_pricing_summary", "q3_top_customers", "text_wordcount",
+  /** Entries timed when no name is given. */
+  val Defaults: Seq[String] = Seq(
+        "q1_pricing_summary", "q3_top_customers", "text_wordcount",
         "text_langid", "dedup_exact", "dedup_minhash_lsh", "dedup_simhash",
         "dedup_embedding_lsh", "ev_hourly_agg", "ev_range_join",
         "ev_asof_busy_hour", "ev_retention", "sim_topk_bruteforce",
@@ -108,43 +106,47 @@ object ScaleSmoke {
         "text_trigram_backoff", "url_normalize", "url_domain_stats",
         "url_domain_manifest", "text_extract_main", "dedup_winnowing",
         "stat_bootstrap_ci", "sim_topk_binary", "curate_k_anonymity")
+  def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // dir is keyed on the SOURCE sf dir as well as the multiplier, so a
-    // run against a different corpus never reuses stale scaled tables
-    val srcKey = src.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = s"/tmp/graft_scale_${srcKey}_x$mult"
-    buildScaledDir(spark, src, dir, mult)
+    val mult = args.headOption.map(_.toInt).getOrElse(8)
+    val queries = if (args.length > 1) args.drop(1).toSeq else Defaults
+    val spark = Local.session()
+    val dir = scaledDir(spark, src, mult)
 
     val fns = SparkEntry.queries
-    // warm-up then timed, same discipline (and cache hygiene) as Bench
-    queries.foreach { n =>
-      try fns(n)(spark, dir).write.mode("overwrite").format("noop").save()
-      catch { case t: Throwable => System.err.println(s"[scale] warmup $n: $t") }
-    }
-    spark.catalog.clearCache()
-    val results = queries.map { n =>
-      val t0 = System.nanoTime()
-      try fns(n)(spark, dir).write.mode("overwrite").format("noop").save()
-      catch { case t: Throwable => System.err.println(s"[scale] $n: $t") }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache() // teardown outside the measured window
-      n -> elapsed
+    // per entry: the min of Local.timed's passes; a failing entry is
+    // reported on stderr and left out of the sum
+    val results = queries.flatMap { n =>
+      try Some(n -> Local.timed(spark)(fns(n)(spark, dir).write
+        .mode("overwrite").format("noop").save()).map(_._1).min)
+      catch { case t: Throwable =>
+        System.err.println(s"[scale] $n: $t")
+        spark.catalog.clearCache()
+        None
+      }
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     println(s"""{"metric":"scale_x$mult","value":${results.map(_._2).sum},"unit":"sec","queries":$qs}""")
     spark.stop()
   }
+
+  /** `/tmp/graft_<kind>_<src>_x<mult>`: keyed on the SOURCE sf dir as
+    * well as the multiplier, so a run against a different corpus never
+    * reuses stale tables. `kind` is `scale` ([[buildScaledDir]]) or
+    * `mutated` ([[buildMutatedDir]]). */
+  def tierDir(kind: String, src: String, mult: Int): String =
+    s"/tmp/graft_${kind}_${src.replaceAll("[^A-Za-z0-9.]", "_")}_x$mult"
+
+  /** `src` itself at 1×, else its [[buildScaledDir]] replica directory
+    * (built on first use). */
+  def scaledDir(spark: SparkSession, src: String, mult: Int): String =
+    if (mult == 1) src
+    else {
+      val dir = tierDir("scale", src, mult)
+      buildScaledDir(spark, src, dir, mult)
+      dir
+    }
 
   /** Union `mult` key-offset copies of each table into `dir` (small dims
     * copied unchanged). Offsets keep every key space disjoint, so join

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{Local, SparkEntry}
 
 /** End-of-round smoke gate (round-8 verdict task #5): run one cheap query
   * per table-loader path against the CURRENT `/root/testdata` and exit
@@ -28,20 +28,13 @@ object SmokeGate {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-smoke-gate")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val byName = graft.queries.Registry.all.map(q => q.name -> q).toMap
+    val spark = Local.session()
+    val fns = SparkEntry.queries
     var failed = List.empty[String]
     probes.foreach { name =>
       val t0 = System.nanoTime()
       try {
-        val n = byName(name).fn(spark, sfDir).count()
+        val n = fns(name)(spark, sfDir).count()
         val ms = (System.nanoTime() - t0) / 1000000
         if (n <= 0) { failed ::= name; println(s"[smoke] FAIL $name: 0 rows") }
         else println(s"[smoke] ok   $name: $n rows (${ms} ms)")

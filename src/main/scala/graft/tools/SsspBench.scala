@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Local
 import graft.apps.ShortestPath
 
 /** Timing harness for the iterative SSSP app on the reference's syn.graph
@@ -19,13 +19,7 @@ object SsspBench {
   def main(args: Array[String]): Unit = {
     val path = args.filterNot(_.startsWith("--")).headOption.getOrElse(
       "/root/reference/sample_apps/shortest_path/syn.graph")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Local.session()
     val plawN = args.collectFirst { case a if a.startsWith("--plaw=") =>
       a.stripPrefix("--plaw=").toLong }
     // --synth=N: the ring+skip graph the CATALOGED `sssp_synthetic`

@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Local
 import graft.operators.Similarity
 
 /** In-session A/B for the NN-descent refinement loop (r15): times the
@@ -17,15 +18,7 @@ import graft.operators.Similarity
 object TimeKnnAb {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Local.session()
     graft.functions.VectorFunctions.register(spark)
 
     /** The r15 shipped shape — delegates to the real entry. */
@@ -130,18 +123,10 @@ object TimeKnnAb {
     val variants = (if (args.nonEmpty) args.toSeq
       else Seq("full", "flagpost", "joincut")).map(n => n -> all(n))
     variants.foreach { case (name, mk) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        mk().write.mode("overwrite").format("noop").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        sec
-      }
-      once() // warm-up
-      val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
-      val runs = Seq.fill(passes)(once()).sorted
+      val runs = Local.timed(spark)(mk().write.mode("overwrite")
+        .format("noop").save()).map(_._1).sorted
       println(f"KNNAB $name%-7s min=${runs.head}%.3f " +
-        f"median=${runs(runs.size / 2)}%.3f passes=$passes")
+        f"median=${runs(runs.size / 2)}%.3f passes=${runs.size}")
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Local
 
 /** Times the trained-ANN TRAINING stages alone (IVF `trainCentroids`, PQ
   * `trainPqCodebooks`) against a scale-tier directory — the direct
@@ -15,23 +15,10 @@ import org.apache.spark.sql.SparkSession
 object TrainTier {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Local.session()
     val e = graft.Tables.embeddings(spark, sfDir)
     def time(label: String)(f: => Unit): Unit = {
-      f // warm-up (JIT + codegen)
-      val runs = Seq.fill(3) {
-        val t0 = System.nanoTime()
-        f
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+      val runs = Local.timed(spark)(f).map(_._1).sorted
       println(f"TRAIN $label%-24s min=${runs.head}%.3f median=${runs(1)}%.3f sf=$sfDir")
     }
     time("ivf_train_centroids") {

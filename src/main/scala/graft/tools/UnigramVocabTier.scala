@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Local
 import graft.operators.Unigram
 
 /** Puts a measured constant on the unigram trainer's
@@ -29,30 +29,16 @@ object UnigramVocabTier {
       }
       else Seq((48, 24), (192, 96), (768, 384))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Local.session()
     variants.foreach { case (seed, prune) =>
-      def once(): (Double, Long) = {
-        val t0 = System.nanoTime()
+      val runs = Local.timed(spark) {
         val w = Unigram.words(spark, sfDir)
-        val vocab = Unigram.emLearn(w, seed, prune)._1
-        val n = vocab.count()
-        ((System.nanoTime() - t0) / 1e9, n)
+        Unigram.emLearn(w, seed, prune)._1.count()
       }
-      once() // warm-up (JIT + codegen)
-      val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
-      val runs = Seq.fill(passes)(once())
       val times = runs.map(_._1).sorted
       println(f"UNIGRAM seed=$seed%-4d prune=$prune%-4d " +
         f"vocab=${runs.head._2}%d min=${times.head}%.3f " +
-        f"median=${times(times.size / 2)}%.3f passes=$passes sf=$sfDir")
+        f"median=${times(times.size / 2)}%.3f passes=${runs.size} sf=$sfDir")
     }
     spark.stop()
   }
