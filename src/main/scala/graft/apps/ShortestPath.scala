@@ -1,8 +1,12 @@
 package graft.apps
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable.LongMap
 
 /** The reference's second sample app: iterative single-source shortest path
   * (`/root/reference/sample_apps/shortest_path/main.cpp`).
@@ -14,20 +18,19 @@ import org.apache.spark.storage.StorageLevel
   * a driver loop feeds the reduce output back as the next frontier until it
   * is empty (main.cpp:178-188).
   *
-  * Spark-first re-expression (SURVEY.md §1.3/§7.4): the shared mutable
-  * `dist[]` becomes a `dist(node, dist)` DataFrame folded with `least()`
-  * each superstep; the CSR scan becomes a hash join frontier⋈edges; the
-  * improvement guard becomes a join+filter against current dist; the
-  * fixpoint test is `frontier.isEmpty`.
+  * Spark-first re-expression: the CSR becomes one [[Csr]] per edge
+  * partition, hash-partitioned by `src`; the shared `dist[]` becomes one
+  * node→dist map per partition under the same partitioner, so a level's
+  * frontier probes its own partition's CSR and only the candidates are
+  * shuffled; the min reduce is `reduceByKey(min)`; the improvement guard
+  * filters candidates against the dist maps; the fixpoint test is an
+  * empty improved set.
   *
   * Scale notes for the 100 TB target:
-  *   - edges are the big side: they stay partitioned; the (small, shrinking)
-  *     frontier is the probe side of the join each superstep.
-  *   - lineage AND inherited stats are cut every BATCH
-  *     (core.Iterative.cutLineage) — without this the plan grows
-  *     unboundedly over hundreds of iterations and the join-product size
-  *     estimate overflows (the hazard the reference's shared memory
-  *     never sees).
+  *   - edges are the big side: they are indexed once per solve and never
+  *     reshuffled; each level reads only the frontier's out-edges.
+  *   - state is cut every batch (`localCheckpoint`), so lineage stays one
+  *     batch deep over hundreds of supersteps.
   *   - k relaxation levels run per Spark action (frontier batching, see
   *     [[distributedSssp]]) so the driver round-trip count is diameter/k,
   *     not diameter.
@@ -151,186 +154,108 @@ object ShortestPath {
     } else distributedSssp(e, source)
   }
 
-  /** Superstep state cut: lineage AND stats — see
-    * [[graft.core.Iterative.cutLineage]] for why plain `localCheckpoint`
-    * is not enough (its inherited join-product stats compound until the
-    * BigInt estimate overflows on syn.graph's 279 supersteps). */
-  private def cutLineage(df: DataFrame): DataFrame =
-    graft.core.Iterative.cutLineage(df)
-
-  /** The fully distributed superstep loop (reference main.cpp:178-188
-    * re-expressed; see class doc). Exercised directly by tests and by the
-    * `sssp_synthetic` catalog entry.
-    *
-    * FRONTIER BATCHING (round 6; VERDICT r5 #5): one superstep per
-    * shortest-path-tree hop level made the solve round-trip-bound — 279
-    * driver-synchronized jobs for the reference's 23 k-edge syn.graph,
-    * each paying Spark's fixed job cost. Now `batchLevels` (k) relaxation
-    * levels run inside ONE action: the unrolled plan chains k
-    * (frontier ⋈ edges → min-per-node) levels — each level's min-reduced
-    * candidate set IS the next level's frontier — unions the k level
-    * outputs, takes one global min per node, and folds it against the
-    * running dist with a single improvement test. Only then does the
-    * driver count/checkpoint. Equivalent to k true supersteps: level j
-    * holds the min over all exactly-j-hop extensions of the batch
-    * frontier, so the union-min is the min over all ≤ k-hop extensions,
-    * and the final `least()` fold discards non-improving candidates the
-    * per-superstep filter would have dropped earlier (idempotent
-    * relaxations — redundant rows, never wrong values). Driver
-    * synchronizations drop k-fold: 279 → 35 batches on syn.graph.
-    *
-    * Join strategy: edges are hash-partitioned by `src` ONCE and cached;
-    * each level's frontier exits its min agg hash-partitioned by `node`
-    * with the same partition count, so the frontier⋈edges join is
-    * co-partitioned — no broadcast needed (checkpointed frames carry no
-    * stats anyway) and the edge relation never reshuffles. The only
-    * per-level exchange is the candidate min agg, sized by the frontier's
-    * out-edges, not the graph. */
-  /** Deepest batch at which the O(k²)-node analyzed plan of the persist
-    * path is known-safe for a default driver heap (measured: k=8 fine,
-    * k=16 OOM). Beyond it, levels are cut to LogicalRDD leaves instead —
-    * see the regime comment in [[distributedSssp]]. */
-  val PersistDepthLimit = 8
-
-  /** Stats-estimated bytes per loop partition (r16, guide §2.2/§2.4):
-    * the superstep loop pays a fixed per-level cost proportional to its
-    * partition count (every level is one exchange + one co-partitioned
-    * join over the SAME partitioning), so a graph whose edge relation
-    * fits in a handful of partitions should run at the graph's own
-    * parallelism, not the cluster-wide `spark.sql.shuffle.partitions`.
-    * 8 MB of plan-estimated edge rows ≈ 250 k (src, dst, weight) rows
-    * per partition; the conf partition count stays the CAP, so any
-    * graph bigger than conf × 8 MB (every production-scale graph) keeps
-    * exactly the pre-r16 plan. */
+  /** Stats-estimated bytes of edge rows per index partition: 8 MB ≈
+    * 250 k (src, dst, weight) rows. Every level pays a fixed cost per
+    * partition, so a small graph runs at its own parallelism instead of
+    * the conf `spark.sql.shuffle.partitions`, which stays the cap. */
   private val SsspBytesPerPart = 8L << 20
 
+  /** Rows of [[distributedSssp]]'s result. */
+  private val DistSchema = StructType(Seq(
+    StructField("node", LongType), StructField("dist", DoubleType)))
+
+  /** The fully distributed superstep loop (reference main.cpp:178-188
+    * re-expressed; see class doc). Exercised directly by tests, the
+    * `sssp_synthetic` catalog entry and the benchmark.
+    *
+    * Index, built once per solve: `edges` hash-partitioned by `src` into
+    * one [[Csr]] per partition, persisted. Vertex state is one node→dist
+    * map per partition under the same partitioner, so every level joins
+    * through `zipPartitions`: nothing but the candidates is shuffled.
+    *
+    * Frontier batching: `batchLevels` relaxation levels run in ONE
+    * action. Level j maps each frontier node through its partition's CSR
+    * to `(dst, dist + w)` (main.cpp:32-46), takes the min per node with a
+    * map-side combine (main.cpp:48-56), and drops every candidate that
+    * does not beat the batch-start dist (the improvement guard,
+    * main.cpp:41). Dropping is safe because the batch-start dist holds
+    * only values whose out-edges were already relaxed. The survivors are
+    * level j+1's frontier. After the last level one co-partitioned fold
+    * merges all levels' survivors into the dist maps; the nodes it
+    * improved are the next batch's frontier. The fold is cut with
+    * `localCheckpoint`, so lineage stays one batch deep. On a real
+    * cluster swap it for `checkpoint` against a reliable dir to also
+    * survive executor loss.
+    *
+    * Jobs are described `graft:sssp/index` and `graft:sssp/batch-<n>`. */
   def distributedSssp(edges: DataFrame, source: Long,
       batchLevels: Int = 8): DataFrame = {
+    require(batchLevels >= 1, s"batchLevels must be at least 1, not $batchLevels")
     val spark = edges.sparkSession
-    import spark.implicits._
-
-    val e0 = edges.select(col("src"), col("dst"), col("weight"))
-    // Scale-adaptive loop parallelism from the optimizer's size estimate
-    // (no extra pass over the data — an exact count would cost one).
-    // Small graph → few partitions (the 1000-node bench entry runs ~350
-    // one-row-scale tasks per batch at conf=32 otherwise); estimate too
-    // big or unavailable → conf partitions, i.e. the pre-r16 plan.
-    val estBytes = e0.queryExecution.optimizedPlan.stats.sizeInBytes
+    val sc = spark.sparkContext
+    val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
+      col("weight").cast("double"))
+    // partition count from the optimizer's size estimate (an exact
+    // count would cost a pass); floor 2 so every test crosses partitions
+    val estBytes = e.queryExecution.optimizedPlan.stats.sizeInBytes
     val conf = spark.sessionState.conf.numShufflePartitions
-    // floor 2, not 1: Spark will not co-partition a join at a single
-    // partition (SinglePartitionShuffleSpec.canCreatePartitioning is
-    // false, and EnsureRequirements rebuilds BOTH sides at conf
-    // partitions — measured: every "1-partition" spelling, repartition
-    // or coalesce, re-exchanged the loop 32-wide), while HashPartitioning
-    // with 2 partitions co-partitions normally.
-    val numParts = math.max(2L, math.min(conf.toLong,
+    val part = new HashPartitioner(math.max(2L,
       ((estBytes + SsspBytesPerPart - 1) / SsspBytesPerPart)
-        .min(BigInt(conf)).toLong)).toInt
-    // compact regime: every exchange in the loop is pinned to numParts so
-    // the co-partitioned frontier⋈edges join never reshuffles the edge
-    // relation. The explicit repartition places the min agg's partials
-    // ABOVE the exchange (map-side combine lost) — the right trade only
-    // when the whole graph is a few MB; at numParts == conf the plan is
-    // byte-identical to the map-side-combining groupBy spelling below.
-    val compact = numParts < conf
-    // compact regime: the loop's partitioning is fully pinned, so
-    // adaptive execution has nothing to improve — but it (a) decomposes
-    // each batch action into one job PER SHUFFLE STAGE with a driver
-    // re-optimization between (measured on the 1000-node bench graph:
-    // 142 jobs, 5.9 s wall of which 3.3 s was driver-side gaps), and
-    // (b) wraps the edge cache's build plan in an AdaptiveSparkPlan,
-    // which hides the cache's hash partitioning from EnsureRequirements
-    // and forces a RE-EXCHANGE OF THE EDGES AT EVERY LEVEL. Scoped
-    // strictly to the loop (restored in finally); at scale
-    // (numParts == conf) AQE stays on for its coalescing/skew handling —
-    // there the per-level work dwarfs the re-planning cost.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeBefore = spark.conf.get(aqeKey)
-    if (compact) spark.conf.set(aqeKey, "false")
-    try {
-    def byNode(df: DataFrame): DataFrame =
-      if (compact) df.repartition(numParts, col("node")) else df
+        .min(BigInt(conf)).toLong).toInt)
 
-    val e = e0
-      .repartition(numParts, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count() // materialize once; read every level of every batch
-
-    // dist: best-known distance per discovered node (≅ dist[], main.cpp:159-163,
-    // but sparse — undiscovered nodes are absent instead of +inf).
-    // Batch state is eagerly cut via cutLineage: without cutting lineage
-    // the logical plan doubles per batch (the full_outer join references
-    // the prior state) and the checkpoint's inherited stats compound (see
-    // cutLineage). On a real cluster swap the inner localCheckpoint for
-    // checkpoint(reliable dir) to also survive executor loss.
-    var dist = cutLineage(Seq((source, 0.0)).toDF("node", "dist"))
-    // frontier: nodes whose dist improved last batch (≅ the recycled
-    // output->input array, main.cpp:186).
-    var frontier = dist
-    var active = 1L
-
-    // Per-level state cut, depth-dependent (the k=16 OOM fix, r6 verdict
-    // #5). The k-level union's ANALYZED tree embeds level i's subtree in
-    // level i+1's, so with plain per-level persist() the batch plan grows
-    // O(k²) nodes and the optimizer/stats passes OOM the default driver
-    // heap at k=16 (reproduced). Two regimes:
-    //   - shallow batches (k ≤ PersistDepthLimit): persist() — the O(k²)
-    //     tree is measured-small and the columnar cache is the faster
-    //     store (k=8: 40.6 s round 6 vs 51.5 s under leaf-cutting);
-    //   - deep batches: LAZY localCheckpoint (eager=false — no job per
-    //     level) returns a frame whose logical plan is a single
-    //     LogicalRDD leaf, so the batch plan is O(k): k=16 57.4 s and
-    //     k=32 68.6 s now run in the default heap, parity 0/18,263.
-    // The operator therefore cannot be configured into the plan-size OOM:
-    // depth selects the bounded representation automatically. Checkpointed
-    // levels still persist their rows (MEMORY_AND_DISK), so the single
-    // action computes each level once — the cache role persist() plays —
-    // and their blocks are reclaimed by the ContextCleaner when the batch
-    // ends (a localCheckpointed RDD must never be unpersisted manually:
-    // its truncated lineage cannot recompute).
-    val usePersist = batchLevels <= PersistDepthLimit
-    while (active > 0) {
-      // k relaxation levels, one plan, no driver synchronization between
-      // levels. Without a per-level cut the single action would recompute
-      // level i in O(k−i) union branches — O(k²) level-joins per batch,
-      // measured 118.7 s.
-      // (alias both sides: a frontier's lineage could otherwise collide
-      // with the edge relation's attribute ids)
-      val levels = Seq.iterate(frontier, batchLevels + 1) { f =>
-        // A4 edge relaxation: frontier ⋈ edges, candidate = dist[src] + w;
-        // A6 min-per-key (map-side partial min for free) — the min-reduced
-        // level is the next level's frontier
-        val level = byNode(f.alias("f").hint("shuffle_hash")
-          .join(e.alias("ed"), col("f.node") === col("ed.src"))
-          .select(col("ed.dst").as("node"),
-            (col("f.dist") + col("ed.weight")).as("cand")))
-          .groupBy("node").agg(min(col("cand")).as("dist"))
-        if (usePersist) level.persist(StorageLevel.MEMORY_AND_DISK)
-        else level.localCheckpoint(false)
-      }.tail
-      val batchBest = byNode(levels.reduce(_ unionAll _))
-        .groupBy("node").agg(min(col("dist")).as("cand"))
-      // A5 improvement filter (main.cpp:41) + dist[] fold (main.cpp:54),
-      // once per batch: full_outer against the running dist, least() keeps
-      // the winner, the improved flag marks next-batch frontier members.
-      // (no explicit repartition on the dist side: EnsureRequirements
-      // rewrites user repartitions directly under a join back to conf
-      // partitions — instead the batchBest side's pinned partitioning is
-      // the satisfying spec, and the dist side's exchange matches it)
-      val foldPlan = dist.withColumnRenamed("dist", "cur")
-        .join(batchBest, Seq("node"), "full_outer")
-        .select(col("node"),
-          least(col("cur"), col("cand")).as("dist"),
-          (col("cur").isNull || col("cand") < col("cur")).as("improved"))
-      val folded = cutLineage(foldPlan)
-      active = folded.where(col("improved")).count()
-      if (usePersist) levels.foreach(_.unpersist(false)) // folded checkpointed
-      frontier = folded.where(col("improved")).select(col("node"), col("dist"))
-      dist = folded.select(col("node"), col("dist"))
+    val csr = graft.core.Jobs.described(sc, "graft:sssp/index") {
+      val idx = e.rdd.flatMap { r =>
+        if (r.anyNull) None else Some((r.getLong(0), (r.getLong(1), r.getDouble(2))))
+      }.partitionBy(part)
+        .mapPartitions(it => Iterator(Csr(it)), preservesPartitioning = true)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      idx.count()
+      idx
     }
-    e.unpersist()
-    dist
-    } finally if (compact) spark.conf.set(aqeKey, aqeBefore)
+    // (dist map, improved nodes) per partition; the source starts both
+    val home = part.getPartition(source)
+    var state: RDD[(LongMap[Double], Array[(Long, Double)])] =
+      csr.mapPartitionsWithIndex((i, _) => Iterator(
+        if (i == home) (LongMap(source -> 0.0), Array(source -> 0.0))
+        else (LongMap.empty[Double], Array.empty[(Long, Double)])),
+        preservesPartitioning = true)
+    var active = 1L
+    var batch = 0
+    while (active > 0) {
+      batch += 1
+      val dist = state.mapPartitions(_.map(_._1), preservesPartitioning = true)
+      def level(frontier: RDD[(Long, Double)]): RDD[(Long, Double)] =
+        frontier.zipPartitions(csr) { (f, g) =>
+          val idx = g.next()
+          f.flatMap { case (n, d) => idx.relax(n, d) }
+        }.reduceByKey(part, math.min(_, _))
+          .zipPartitions(dist, preservesPartitioning = true) { (c, ds) =>
+            val cur = ds.next()
+            c.filter { case (n, d) => d < cur.getOrElse(n, Double.PositiveInfinity) }
+          }
+      val levels = Seq.iterate(level(state.mapPartitions(
+        _.flatMap(_._2), preservesPartitioning = true)), batchLevels)(level)
+      val next = sc.union(levels).zipPartitions(state,
+          preservesPartitioning = true) { (c, st) =>
+        val cur = st.next()._1.clone()
+        val improved = LongMap.empty[Double]
+        c.foreach { case (n, d) =>
+          if (d < cur.getOrElse(n, Double.PositiveInfinity)) {
+            cur(n) = d
+            improved(n) = d
+          }
+        }
+        Iterator((cur, improved.toArray))
+      }.localCheckpoint()
+      active = graft.core.Jobs.described(sc, s"graft:sssp/batch-$batch") {
+        next.map(_._2.length.toLong).fold(0L)(_ + _)
+      }
+      state.unpersist(false) // its successor is materialized
+      state = next
+    }
+    csr.unpersist(false)
+    spark.createDataFrame(
+      state.flatMap(_._1.iterator.map { case (n, d) => Row(n, d) }), DistSchema)
   }
 
   /** Serial Dijkstra oracle (≅ reference main.cpp:108-140) — test-only. */
@@ -355,5 +280,34 @@ object ShortestPath {
       }
     }
     dist.toMap
+  }
+}
+
+/** One partition's edges in compressed sparse row form (the reference's
+  * `offsets`/`edges` arrays, main.cpp:32-46): `srcs` sorted and distinct;
+  * the out-edges of `srcs(i)` are `offsets(i) until offsets(i + 1)` in
+  * `dsts` and `weights`. */
+private[apps] final class Csr(srcs: Array[Long], offsets: Array[Int],
+    dsts: Array[Long], weights: Array[Double]) extends Serializable {
+
+  /** `(dst, d + weight)` for each out-edge of `src`; none if it has none. */
+  def relax(src: Long, d: Double): Iterator[(Long, Double)] = {
+    val i = java.util.Arrays.binarySearch(srcs, src)
+    if (i < 0) Iterator.empty
+    else Iterator.range(offsets(i), offsets(i + 1)).map(j => (dsts(j), d + weights(j)))
+  }
+}
+
+private[apps] object Csr {
+  def apply(edges: Iterator[(Long, (Long, Double))]): Csr = {
+    val es = edges.toArray.sortBy(_._1)
+    val srcs = Array.newBuilder[Long]
+    val offsets = Array.newBuilder[Int]
+    for (j <- es.indices if j == 0 || es(j)._1 != es(j - 1)._1) {
+      srcs += es(j)._1
+      offsets += j
+    }
+    offsets += es.length
+    new Csr(srcs.result(), offsets.result(), es.map(_._2._1), es.map(_._2._2))
   }
 }

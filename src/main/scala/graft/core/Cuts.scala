@@ -73,7 +73,7 @@ object Par {
 }
 
 /** Scale-adaptive parallelism for the synthetic n-node graph families
-  * (r17; VERDICT r16 item 2 — the `distributedSssp` recipe generalized):
+  * (r17; VERDICT r16 item 2):
   * an unrolled superstep loop pays a fixed per-round cost proportional
   * to its partition count, so a graph whose node relation fits in a
   * handful of partitions should run at the graph's own parallelism, not
@@ -83,7 +83,8 @@ object Par {
   * graph bigger than conf × RowsPerPart keeps cluster-wide parallelism —
   * at 100 TB the plan is the same as before this change. Floor 2, not
   * 1: Spark will not co-partition a join at a single partition
-  * (see ShortestPath's measured note). */
+  * (`SinglePartitionShuffleSpec` cannot create a partitioning, so
+  * EnsureRequirements re-exchanges both sides at the conf count). */
 object Parallelism {
   private val RowsPerPart = 250000L
 

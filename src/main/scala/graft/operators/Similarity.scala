@@ -614,7 +614,7 @@ object Similarity {
         ORDER BY h, vec_id) AS rs FROM __sh) WHERE rs <= $n)"""
 
   /** K-means (Lloyd) training for IVF centroids — the A7 superstep pattern
-    * (`ShortestPath.distributedSssp` shape): per round one broadcast-join
+    * (a driver loop with one action per round): per round one broadcast-join
     * assignment pass over the TRAINING SAMPLE, one hash-agg centroid
     * update, and a K×D-double collect back to the driver (centroids are
     * driver state in any k-means — MLlib's included; this is the BPE

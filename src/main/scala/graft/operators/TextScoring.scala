@@ -448,7 +448,8 @@ object TextScoring {
     * from the same constants (the ivfTrainSqlDuck convention). CTEs are
     * MATERIALIZED: each round references the previous weight relation
     * twice, and without materialization the inlined chain re-evaluates
-    * exponentially (the PersistDepthLimit lesson, DuckDB edition).
+    * exponentially (2^R copies of round 1, as an uncut Spark loop's
+    * analyzed plan would hold).
     * The final SELECT scores the corpus with wR and applies the
     * accuracy-optimal cut computed over the distinct-score relation. */
   private def qtTrainSqlDuck: String = {

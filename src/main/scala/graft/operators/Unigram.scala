@@ -217,9 +217,9 @@ object Unigram {
     // forward DP, position-unrolled: dp(word, j, cost, pi, piece).
     // Each stage is LAZILY checkpointed: dp_j references dp_{j-1} twice
     // (through the union AND inside the stage join), so without the cut
-    // the analyzed plan doubles per stage — 2^MaxPos subtree copies,
-    // the PersistDepthLimit lesson (the DuckDB oracle's MATERIALIZED
-    // CTEs are the same fix on the other engine). The checkpoint chain
+    // the analyzed plan doubles per stage — 2^MaxPos subtree copies
+    // (the DuckDB oracle's MATERIALIZED CTEs are the same fix on the
+    // other engine). The checkpoint chain
     // materializes vocabulary-sized relations only.
     var dpAll = w.select(col("word"), lit(0L).as("j"), lit(0L).as("cost"),
       lit(-1L).as("pi"), lit("").as("piece"))

@@ -131,18 +131,18 @@ object MapReduceQueries {
   /** Iterative SSSP (shortest_path app) over a deterministic synthetic
     * graph — the FULLY DISTRIBUTED superstep loop (distributedSssp is
     * called directly, NOT the sssp() local-solve cutover — since
-    * cba55cf; PlanShapeSpec pins the checkpointed-superstep plan shape,
-    * r14 verdict item 2). The oracle is a bounded recursive CTE over the
+    * cba55cf; PlanShapeSpec pins that its result is a LogicalRDD, not a
+    * local relation, r14 verdict item 2). The oracle is a bounded recursive CTE over the
     * same closed-form edge relation (ShortestPath.syntheticOracleSql);
     * Dijkstra parity is additionally proven in ScalaTest.
     *
     * BENCHED since r16 (r15 verdict item 3 — this was the only
     * §2.2-derived entry without a bench row): the ring+skip graph's
     * skip edges give it a small diameter, so the superstep loop
-    * converges in a bounded handful of rounds and the entry's cost is
-    * dominated by the per-superstep fixed overhead (join + improvement
-    * count + lineage cut) — exactly the quantity worth watching for
-    * the reference's flagship iterative operator. */
+    * converges in a bounded handful of batches and the entry's cost is
+    * dominated by the per-batch fixed overhead (one job, one checkpoint)
+    * — exactly the quantity worth watching for the reference's flagship
+    * iterative operator. */
   val ssspSynthetic = QueryDef("sssp_synthetic",
     (s, _) => {
       val edges = ShortestPath.syntheticGraph(s, 1000L)

@@ -41,8 +41,7 @@ class DedupSpec extends SparkSpec {
     // whose pair output is quadratic by construction
     val OFF = 1000000000L
     def pairsAt(mult: Int): (Set[(Long, Long)], Set[(Long, Long)]) = {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_mutated_x$mult").toString
+      val dir = tempDir(s"graft_mutated_x$mult")
       graft.tools.ScaleSmoke.buildMutatedDir(spark, sf("sf0.001"), dir, mult)
       val got = Dedup.minhashPairs(Tables.documents(spark, dir))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -19,8 +19,7 @@ class EmptyInputSweepSpec extends SparkSpec {
     // per-run temp directory: a fixed cached path went stale when source
     // schemas changed and was shared between concurrent CI runs — the
     // build is 10 empty writes, cheap enough to redo every run
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_empty_sf").toString
+    val dir = tempDir("graft_empty_sf")
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
     // events.parquet is TIMESTAMP(NANOS): read it as raw int64 nanos,

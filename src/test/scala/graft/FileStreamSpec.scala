@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
 class FileStreamSpec extends SparkSpec {
 
   test("readStream over a parquet directory == batch over the same files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = tempDir("graft_stream")
+    val ckpt = tempDir("graft_ckpt")
     // two separate files so the source discovers multiple splits
     val ev = Tables.events(spark, sf("sf0.001"))
     ev.filter(col("event_id") % 2 === 0).write.parquet(s"$dir/b0")
@@ -40,8 +40,8 @@ class FileStreamSpec extends SparkSpec {
   }
 
   test("streaming decontamination == batch over the same document files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_docs").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_dckpt").toString
+    val dir = tempDir("graft_docs")
+    val ckpt = tempDir("graft_dckpt")
     val docs = Tables.documents(spark, sf("sf0.001"))
     docs.filter(col("doc_id") % 2 === 0 && col("doc_id") >= 50).write.parquet(s"$dir/b0")
     docs.filter(col("doc_id") % 2 === 1 && col("doc_id") >= 50).write.parquet(s"$dir/b1")
@@ -70,8 +70,8 @@ class FileStreamSpec extends SparkSpec {
   }
 
   test("streaming incremental dedup == the batch probe over the same split") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_inc").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ickpt").toString
+    val dir = tempDir("graft_inc")
+    val ckpt = tempDir("graft_ickpt")
     val d = sf("sf0.001")
     val docs = Tables.documents(spark, d)
     // static index = the existing corpus; stream = the incoming batch,
@@ -106,8 +106,8 @@ class FileStreamSpec extends SparkSpec {
   }
 
   test("streaming substring probe == the batch probe over the same split") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sub").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_subck").toString
+    val dir = tempDir("graft_sub")
+    val ckpt = tempDir("graft_subck")
     val d = sf("sf0.001")
     val docs = Tables.documents(spark, d)
     val isBatch = col("doc_id") % 8 === 7
@@ -142,8 +142,8 @@ class FileStreamSpec extends SparkSpec {
   }
 
   test("streaming component maintenance: label store == from-scratch after all batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cmp").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cmpck").toString
+    val dir = tempDir("graft_cmp")
+    val ckpt = tempDir("graft_cmpck")
     val d = sf("sf0.001")
     val docs = Tables.documents(spark, d)
     val isBatch = col("doc_id") % 8 === 7
@@ -186,8 +186,8 @@ class FileStreamSpec extends SparkSpec {
   }
 
   test("streaming curation pipeline: microbatch-days == the batch pipeline's ledger") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pipe_s").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_pipe_sck").toString
+    val dir = tempDir("graft_pipe_s")
+    val ckpt = tempDir("graft_pipe_sck")
     val d = sf("sf0.001")
     // the batch pipeline's day-1/2 ledger rows: day 3's appends happen
     // AFTER those rows are materialized, so the 2-day stream must
@@ -227,9 +227,9 @@ class FileStreamSpec extends SparkSpec {
 
   test("refreshable holdout: n-grams added between microbatches flag later docs only") {
     import spark.implicits._
-    val docsDir = java.nio.file.Files.createTempDirectory("graft_rdocs").toString
-    val holdDir = java.nio.file.Files.createTempDirectory("graft_rhold").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_rckpt").toString
+    val docsDir = tempDir("graft_rdocs")
+    val holdDir = tempDir("graft_rhold")
+    val ckpt = tempDir("graft_rckpt")
     val phraseA = "alpha bravo charlie delta echo foxtrot golf hotel"
     val phraseB = "one two three four five six seven eight"
     def docsDF(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
@@ -269,8 +269,8 @@ class FileStreamSpec extends SparkSpec {
   }
 
   test("streaming quality scoring == batch over the same document files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_qdocs").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qckpt").toString
+    val dir = tempDir("graft_qdocs")
+    val ckpt = tempDir("graft_qckpt")
     val docs = Tables.documents(spark, sf("sf0.001"))
     docs.filter(col("doc_id") % 2 === 0).write.parquet(s"$dir/b0")
     docs.filter(col("doc_id") % 2 === 1).write.parquet(s"$dir/b1")
@@ -296,9 +296,9 @@ class FileStreamSpec extends SparkSpec {
   }
 
   test("checkpoint recovery: restart mid-ingest is exactly-once") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckrec_in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_ckrec_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckrec_ck").toString
+    val dir = tempDir("graft_ckrec_in")
+    val out = tempDir("graft_ckrec_out")
+    val ckpt = tempDir("graft_ckrec_ck")
     val docs = Tables.documents(spark, sf("sf0.001"))
     docs.filter(col("doc_id") % 2 === 0).write.parquet(s"$dir/b0")
     val schema = spark.read.parquet(s"$dir/b0").schema
@@ -330,8 +330,8 @@ class FileStreamSpec extends SparkSpec {
   }
 
   test("checkpoint recovery: aggregation state survives a restart") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckst_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckst_ck").toString
+    val dir = tempDir("graft_ckst_in")
+    val ckpt = tempDir("graft_ckst_ck")
     val ev = Tables.events(spark, sf("sf0.001"))
     ev.filter(col("event_id") % 2 === 0).write.parquet(s"$dir/b0")
     val schema = spark.read.parquet(s"$dir/b0").schema
@@ -363,7 +363,7 @@ class FileStreamSpec extends SparkSpec {
   }
 
   test("stream-static join: streaming events enriched by a static dimension") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ss").toString
+    val dir = tempDir("graft_ss")
     val ev = Tables.events(spark, sf("sf0.001"))
     ev.write.parquet(s"$dir/ev")
     val schema = spark.read.parquet(s"$dir/ev").schema

@@ -18,8 +18,7 @@ class MarkovSteadySpec extends SparkSpec {
 
   /** One user's event sequence at hourly steps on one day. */
   private def seqDir(types: Seq[String]): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_markov_fixture").toString
+    val dir = tempDir("graft_markov_fixture")
     val sess = spark
     import sess.implicits._
     types.zipWithIndex.map { case (t, i) =>

@@ -12,7 +12,7 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft_src").toString
+    tempDir("graft_src")
 
   test("partitioned parquet write + partition pruning on read") {
     val dir = tmpDir() + "/li_part"

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -8,6 +10,20 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String): String = s"/root/testdata/$name"
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+
+  /** A new directory under `java.io.tmpdir`; it and everything in it is
+    * deleted once the suite's tests have run. */
+  def tempDir(prefix: String): String = tempDirs.synchronized {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs += d
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.synchronized(tempDirs.foreach(SparkSpec.deleteRecursively))
+    finally super.afterAll()
 
   /** Runs `body` with the given session confs set, then restores each
     * key's previous value (or unsets it). */
@@ -38,6 +54,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  def deleteRecursively(root: Path): Unit = if (Files.exists(root)) {
+    val paths = Files.walk(root)
+    try paths.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+    finally paths.close()
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -141,8 +141,8 @@ class StreamingSpec extends SparkSpec {
 
   test("parquet file sink: streaming writes land as readable files equal to the batch result") {
     implicit val sc = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("graft_psink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_psinkck").toString
+    val outDir = tempDir("graft_psink")
+    val ckpt = tempDir("graft_psinkck")
     val mem = MemoryStream[Ev]
     val events = Seq(
       Ev(ts(1), 1, "click", 1.0), Ev(ts(2), 2, "view", 2.0),

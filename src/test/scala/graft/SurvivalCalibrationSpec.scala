@@ -19,8 +19,7 @@ class SurvivalCalibrationSpec extends SparkSpec {
 
   /** events-only fixture dir: (user, day, type) triples at noon UTC. */
   private def eventsDir(rows: Seq[(Long, Int, String)]): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_km_fixture").toString
+    val dir = tempDir("graft_km_fixture")
     val sess = spark
     import sess.implicits._
     rows.zipWithIndex.map { case ((u, day, tpe), i) =>
