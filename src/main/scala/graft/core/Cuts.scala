@@ -3,41 +3,55 @@ package graft.core
 import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
 
-/** Lazy plan cuts for a relation referenced by several downstream
-  * subtrees inside ONE query. Cutting replaces the shared subtree with a
-  * materialized leaf so the consumers' combined plan stays linear in the
-  * number of consumers instead of duplicating the subtree per reference
-  * (guide §7.2 duplicated-subtree audit; the MMR greedy loop's analyzed
-  * plan was 3^rounds copies of round 1 before its cut).
+/** The one place an operator materializes an intermediate relation. No
+  * operator calls `localCheckpoint` itself; it names WHY it cuts, and
+  * the verb decides how:
   *
-  * Strategy — `spark.graft.planCuts` session conf (r17; verdict item 8,
-  * "decide the corpus-scale checkpoint policy"):
+  *  - [[cut]]: a subtree shared by several consumers of ONE bounded
+  *    plan (a tokenized corpus feeding three joins, a shingle-set
+  *    relation feeding bands and verification). Cutting replaces the
+  *    shared subtree with a materialized leaf, so the combined plan
+  *    stays linear in the number of consumers instead of duplicating
+  *    the subtree per reference (the MMR greedy loop's analyzed plan was
+  *    3^rounds copies of round 1 before its cut). How it cuts is the
+  *    `spark.graft.planCuts` session conf:
+  *     - `local` (default): lazy `localCheckpoint(false)`. The blocks
+  *       are owned by the checkpointed RDD and freed by the
+  *       ContextCleaner; nothing registers in the CacheManager, so two
+  *       queries of one bench session that build logically-equal frames
+  *       never share a cache entry, and no query leaves one behind
+  *       (CacheHygieneSpec). Lazy, so the cut materializes inside the
+  *       query's own first action and plan-only callers (Explain) pay
+  *       no job. The trade: lineage is TRUNCATED to executor-local
+  *       blocks, so on a cluster one lost executor kills the job.
+  *     - `persist`: `persist(MEMORY_AND_DISK)`, the same cut with
+  *       lineage intact (a lost block recomputes from the scan) and the
+  *       columnar cache format. The production setting; it registers
+  *       CacheManager entries by design, so a caller clears the cache
+  *       between unrelated queries (PersistCutsSpec).
+  *     - `none`: no cut; the full lineage stays in the plan.
+  *       CatalogPlanSweepSpec plans every entry this way, so its
+  *       boundedness witnesses see the producing subtree instead of an
+  *       opaque LogicalRDD leaf.
+  *  - [[loop]]: a relation whose plan would otherwise grow with a loop
+  *    or stage count (Unigram's position-unrolled DP and EM stages, the
+  *    kNN refine round's graph). A lazy `localCheckpoint` in EVERY mode:
+  *    `persist` keeps the whole analyzed tree behind its cache entry, and
+  *    `none` lets it double per stage. Measured under `none` at sf0.001
+  *    on a 4-core box with these cuts mode-governed: the kNN refine
+  *    entry's physical plan took 16 s to build and printed as 846 KB of
+  *    text, and `text_unigram_encode` had not finished planning after
+  *    7 minutes.
+  *  - [[barrier]]: a relation that must be materialized NOW, in every
+  *    mode: a plan that reads a table the caller is about to overwrite
+  *    or append to (the day report and window-hash delta of the
+  *    incremental pipeline, the streaming microbatches), or a bounded
+  *    sample a driver loop re-reads every round. An eager
+  *    `localCheckpoint`; under `none`, skipping it would let the write
+  *    move the table before its reader ran.
   *
-  *  - `local` (default): lazy `localCheckpoint(false)` — blocks are
-  *    RDD-owned, per-invocation, GC-cleaned, and materialize inside the
-  *    query's own action. Right for the single-node bench: nothing
-  *    registers in the CacheManager, so two queries that happen to build
-  *    logically-equal frames can never poison each other's timings via
-  *    plan-equality cache hits. The trade: `localCheckpoint` TRUNCATES
-  *    lineage to executor-local blocks — on a real cluster one lost
-  *    executor kills the job instead of recomputing (guide §5).
-  *  - `persist`: `persist(MEMORY_AND_DISK)` — the same cut with lineage
-  *    INTACT (a lost block recomputes from the parquet scan) and the
-  *    cheaper columnar cache format. Production / cluster deployments
-  *    should run with this; it is not the bench default only because
-  *    CacheManager plan-equality matching could silently share frames
-  *    across the 200+ queries of one bench session.
-  *  - `none`: no cut — the full lineage stays visible in the plan.
-  *    CatalogPlanSweepSpec plans every catalog entry in this mode so its
-  *    boundedness witnesses (scans, limits, aggregates below a hinted
-  *    broadcast) are audited against the REAL producing subtree instead
-  *    of an opaque LogicalRDD leaf. Which path a hybrid operator takes
-  *    is not a cut decision: that is [[Hybrid]]'s key.
-  *
-  * Bounded cuts (≤ B-row bucket/offset relations, LIMIT-k shortlists)
-  * are free under any strategy; corpus-scaled cuts are the ones the
-  * `persist` strategy exists for.
-  */
+  * Which path a hybrid operator takes is not a cut decision: that is
+  * [[Hybrid]]'s key. */
 object Cuts {
   val ConfKey = "spark.graft.planCuts"
 
@@ -47,6 +61,10 @@ object Cuts {
       case "persist" => ds.persist(StorageLevel.MEMORY_AND_DISK)
       case _ => ds.localCheckpoint(false)
     }
+
+  def loop[T](ds: Dataset[T]): Dataset[T] = ds.localCheckpoint(false)
+
+  def barrier[T](ds: Dataset[T]): Dataset[T] = ds.localCheckpoint(true)
 }
 
 /** Overlap independent Spark actions (guide §2.6: the scheduler happily

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.core.Cuts
 
 /** Real byte-pair-encoding: iterative pair-merge vocabulary learning over
   * the documents corpus, then greedy encoding with the learned merges —
@@ -19,7 +20,7 @@ import graft.{QueryDef, Tables}
   * pattern SSSP uses); each round is one tiny aggregation job (argmax
   * collect, like SSSP's fixpoint count) plus one narrow projection. The
   * corpus is scanned ONCE — the initial word-frequency aggregation — and
-  * eagerly checkpointed; everything after runs on the (vocabulary-sized)
+  * cut; everything after runs on the (vocabulary-sized)
   * state, which is exactly why corpus BPE scales: rounds cost O(vocab),
   * not O(corpus), no matter how many documents feed the word counts.
   *
@@ -46,8 +47,8 @@ object Bpe {
   private val Sep = "  " // two-space symbol separator (see class doc)
 
   /** (word, freq) for the corpus, plus the initial character-level state
-    * string. One corpus scan; checkpointed eagerly so the merge rounds
-    * never re-read the documents table. */
+    * string. One corpus scan, cut so the merge rounds never re-read the
+    * documents table. */
   private def initialWords(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(explode(split(col("text"), " ")).as("word"))
@@ -55,10 +56,7 @@ object Bpe {
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .withColumn("state",
         concat(lit(Sep), array_join(split(col("word"), ""), Sep), lit(Sep)))
-      // lazy: materializes on the first of the ~10 merge-round jobs and
-      // is reused after; eager would run a corpus scan at query-CONSTRUCTION
-      // time (plan-only callers like Explain would pay a job for nothing)
-      .localCheckpoint(false)
+      .transform(Cuts.cut)
 
   /** Adjacent-pair counts over the current states, ready for argmax. */
   private def pairCounts(states: DataFrame): DataFrame =
@@ -182,7 +180,7 @@ object Bpe {
         concat(lit(Sep), array_join(
           expr("transform(utf8_bytes(word), b -> CAST(b AS STRING))"), Sep),
           lit(Sep)))
-      .localCheckpoint(false)
+      .transform(Cuts.cut)
   }
 
   /** Byte-level merge: the merged atom is `a_b`, not `ab` (see

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.core.Cuts
 import graft.functions.TextFunctions._
 
 /** Document chunking and higher-order LM scoring — the two remaining
@@ -221,7 +222,7 @@ object Chunking {
       val docs = Tables.documents(s, d)
         .withColumn("t", tokens(col("text")))
         .select(col("doc_id"), col("t"))
-        .localCheckpoint(false)
+        .transform(Cuts.cut)
       val train = docs.filter(col("doc_id") % 5 =!= 0)
       val c3 = train.filter(size(col("t")) >= 3)
         .select(explode(expr(shinglesSql("t", 3))).as("g"))
@@ -359,7 +360,7 @@ object Chunking {
       val docs = docsIn
         .withColumn("t", tokens(col("text")))
         .select(col("doc_id"), col("t"))
-        .localCheckpoint(false) // shared: grams, tokens, final report join
+        .transform(Cuts.cut) // shared: grams, tokens, final report join
       // boundary detector: rolling hash of each W-token gram; a gram
       // starting at pos cuts AFTER token pos+W-1
       val cuts = docs
@@ -389,7 +390,7 @@ object Chunking {
           "aggregate(arr, CAST(0 AS BIGINT), " +
             "(h, x) -> (h * 1000003L + x.th) % 1000000007L)"))
         .select(col("doc_id"), col("start"), col("ct"), col("ch"))
-        .localCheckpoint(false) // three consumers: firsts, fpos, dup join
+        .transform(Cuts.cut) // three consumers: firsts, fpos, dup join
       val firsts = chunks.groupBy(col("ch")).agg(min(col("doc_id")).as("fd"))
       val fpos = chunks.join(firsts, "ch")
         .where(col("doc_id") === col("fd"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.sources.Sinks
 
 /** Connected components over the near-duplicate candidate graph — the step
   * that turns pairwise dedup verdicts into keep/drop groups (a near-dup
@@ -29,6 +30,26 @@ object Components {
     Seq(dedupComponents, splitLeakageSafe, componentsIncremental,
       componentsIncrementalStored)
 
+  /** The DuckDB oracles' near-duplicate components over `documents`:
+    * MinHash-LSH candidate pairs verified at Jaccard ≥ 0.5, then
+    * `comp(node, component)` = the minimum doc id reachable through the
+    * symmetric pair graph. A `WITH RECURSIVE` prefix: each entry's oracle
+    * continues with its own CTEs or its final SELECT. */
+  private[graft] def nearDupComponentsSqlDuck: String =
+    s"""WITH RECURSIVE ${Dedup.minhashCtesSqlDuck(
+        "(SELECT doc_id, string_split(text,' ') AS t FROM documents)")},
+      cands AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
+        FROM bands x JOIN bands y
+          ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
+      pairs AS (SELECT a, b FROM cands
+        JOIN sets sa ON sa.doc_id = a JOIN sets sb ON sb.doc_id = b
+        WHERE ${Dedup.jaccardSqlDuck("sa.hs", "sb.hs")} >= 0.5),
+      sym AS (SELECT a AS u, b AS v FROM pairs
+        UNION SELECT b, a FROM pairs),
+      reach(u, v) AS (SELECT u, v FROM sym
+        UNION SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u),
+      comp AS (SELECT u AS node, LEAST(u, MIN(v)) AS component
+        FROM reach GROUP BY u)"""
 
   /** Incremental connected-component maintenance — the daily-ingest twin
     * of [[connectedComponentsStar]]: stored `(node, component)` labels
@@ -94,20 +115,7 @@ object Components {
         .select(col("node"), col("component"), col("csize"))
         .orderBy(col("node"))
     },
-    Some(s"""WITH RECURSIVE ${graft.operators.Dedup.minhashCtesSqlDuck(
-        "(SELECT doc_id, string_split(text,' ') AS t FROM documents)")},
-      cands AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-        FROM bands x JOIN bands y
-          ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
-      pairs AS (SELECT a, b FROM cands
-        JOIN sets sa ON sa.doc_id = a JOIN sets sb ON sb.doc_id = b
-        WHERE ${graft.operators.Dedup.jaccardSqlDuck("sa.hs", "sb.hs")} >= 0.5),
-      sym AS (SELECT a AS u, b AS v FROM pairs
-        UNION SELECT b, a FROM pairs),
-      reach(u, v) AS (SELECT u, v FROM sym
-        UNION SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u),
-      comp AS (SELECT u AS node, LEAST(u, MIN(v)) AS component
-        FROM reach GROUP BY u)
+    Some(s"""$nearDupComponentsSqlDuck
       SELECT node, component, csize FROM comp
       JOIN (SELECT component, COUNT(*) AS csize FROM comp GROUP BY component)
         USING (component)
@@ -141,7 +149,7 @@ object Components {
       val newDocs = docs.filter(isBatch)
       // bootstrap: build + persist the stored state (amortized across
       // ingests in production; charged to this entry to stay one-shot)
-      val base = Dedup.sinkBase(d)
+      val base = Sinks.sinkBase(d)
       Dedup.writeMinhashIndexTables(oldDocs, base,
         "graft_comp_bands", "graft_comp_sets")
       connectedComponentsStar(Dedup.minhashClassEdges(oldDocs))
@@ -280,20 +288,7 @@ object Components {
         .select(col("node"), col("component"), col("csize"))
         .orderBy(col("node"))
     },
-    Some(s"""WITH RECURSIVE ${graft.operators.Dedup.minhashCtesSqlDuck(
-        "(SELECT doc_id, string_split(text,' ') AS t FROM documents)")},
-      cands AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-        FROM bands x JOIN bands y
-          ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
-      pairs AS (SELECT a, b FROM cands
-        JOIN sets sa ON sa.doc_id = a JOIN sets sb ON sb.doc_id = b
-        WHERE ${graft.operators.Dedup.jaccardSqlDuck("sa.hs", "sb.hs")} >= 0.5),
-      sym AS (SELECT a AS u, b AS v FROM pairs
-        UNION SELECT b, a FROM pairs),
-      reach(u, v) AS (SELECT u, v FROM sym
-        UNION SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u),
-      comp AS (SELECT u AS node, LEAST(u, MIN(v)) AS component
-        FROM reach GROUP BY u)
+    Some(s"""$nearDupComponentsSqlDuck
       SELECT node, component, csize FROM comp
       JOIN (SELECT component, COUNT(*) AS csize FROM comp GROUP BY component)
         USING (component)
@@ -328,20 +323,7 @@ object Components {
         .select(col("doc_id"), col("group_key"), col("split"))
         .orderBy(col("doc_id"))
     },
-    Some(s"""WITH RECURSIVE ${graft.operators.Dedup.minhashCtesSqlDuck(
-        "(SELECT doc_id, string_split(text,' ') AS t FROM documents)")},
-      cands AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-        FROM bands x JOIN bands y
-          ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
-      pairs AS (SELECT a, b FROM cands
-        JOIN sets sa ON sa.doc_id = a JOIN sets sb ON sb.doc_id = b
-        WHERE ${graft.operators.Dedup.jaccardSqlDuck("sa.hs", "sb.hs")} >= 0.5),
-      sym AS (SELECT a AS u, b AS v FROM pairs
-        UNION SELECT b, a FROM pairs),
-      reach(u, v) AS (SELECT u, v FROM sym
-        UNION SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u),
-      comp AS (SELECT u AS node, LEAST(u, MIN(v)) AS component
-        FROM reach GROUP BY u)
+    Some(s"""$nearDupComponentsSqlDuck
       SELECT d.doc_id,
         COALESCE(c.component, d.doc_id) AS group_key,
         CASE WHEN ((COALESCE(c.component, d.doc_id) * 1000003 + 17)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.core.Cuts
+import graft.sources.Sinks
 import graft.functions.TextFunctions._
 
 /** Deduplication operators over `documents` / `embeddings` (north-star
@@ -75,19 +77,19 @@ object Dedup {
       val docs = docsIn
         .withColumn("t", tokens(col("text")))
         .select(col("doc_id"), col("t"))
-        .localCheckpoint(false) // shared by the window fan-out + final join
+        .transform(Cuts.cut) // shared by the window fan-out + final join
       // materialize the hashed window instances ONCE: three consumers
       // (first-doc agg, first-pos agg, the flag join) would otherwise
       // each re-run the W-word gram assembly + hash — the dominant cost
       // (O(L·W) character work per pass; the A/B is in BASELINE.md).
       // The materialized relation is compact: (doc_id, pos, gh) ≈ 20 B
-      // per corpus token, RDD-owned like every other localCheckpoint.
+      // per corpus token.
       val w = docs
         .select(col("doc_id"), posexplode(expr(shinglesSql("t", W))))
         .withColumnRenamed("pos", "pos0")
         .withColumn("gh", rollHash("col"))
         .select(col("doc_id"), col("pos0").as("pos"), col("gh"))
-        .localCheckpoint(false)
+        .transform(Cuts.cut)
       val firsts = w.groupBy(col("gh")).agg(min(col("doc_id")).as("fd"))
       val firstPos = w.join(firsts, "gh")
         .where(col("doc_id") === col("fd"))
@@ -186,7 +188,7 @@ object Dedup {
       val b = batchDocs
         .withColumn("t", tokens(col("text")))
         .select(col("doc_id"), col("t"))
-        .localCheckpoint(false)
+        .transform(Cuts.cut)
       val bw = b
         .select(col("doc_id"), posexplode(expr(shinglesSql("t", W))))
         .withColumnRenamed("pos", "pos0")
@@ -263,7 +265,8 @@ object Dedup {
         .select(col("gh")).distinct()
         .write.mode("overwrite")
         .bucketBy(16, "gh").sortBy("gh")
-        .option("path", s"${sinkBase(d)}/graft_substr_idx").format("parquet")
+        .option("path", s"${Sinks.sinkBase(d)}/graft_substr_idx")
+        .format("parquet")
         .saveAsTable("graft_substr_idx")
       // steady state: probe the re-read index
       spanReport(probeFlagsStored(docs.filter(isBatch),
@@ -281,7 +284,7 @@ object Dedup {
     val b = batchDocs
       .withColumn("t", tokens(col("text")))
       .select(col("doc_id"), col("t"))
-      .localCheckpoint(false)
+      .transform(Cuts.cut)
     val bw = windowHashesOfTok(b, W)
     val flagged = bw.join(s.table(idxTable), Seq("gh"), "left_semi")
       .select(col("doc_id"), col("pos"))
@@ -599,15 +602,8 @@ object Dedup {
       // Materialize the shingle sets ONCE for the 3 uses below — A/B at
       // sf0.1: recompute min 4.50 s vs materialized min 1.27 s (the
       // distinct-shingle build dominates, unlike the langid/decontaminate
-      // pipelines where recompute won). But .cache() left a CacheManager
-      // entry per invocation (a per-call leak for library callers, only
-      // papered over by the harnesses' clearCache); localCheckpoint keeps
-      // the same one-shot materialization with blocks owned by the RDD —
-      // the ContextCleaner frees them on GC, no session-lifetime state.
-      // CacheHygieneSpec pins the no-cache-entry invariant catalog-wide.
-      // Lazy (false): materializes with the first action instead of at
-      // query-construction time, so plan-only callers (Explain) stay free.
-      val sets = hashedShingleSetsOf(docs).localCheckpoint(false)
+      // pipelines where recompute won).
+      val sets = Cuts.cut(hashedShingleSetsOf(docs))
       minhashPairsFromSets(sets, minhashBands(sets))
   }
 
@@ -665,7 +661,7 @@ object Dedup {
     (s, d) => {
       graft.functions.HashExpressions.register(s)
       val sets = hashedShingleSetsOf(Tables.documents(s, d))
-        .localCheckpoint(false)
+        .transform(Cuts.cut)
       val bands = minhashBands(sets)
       val isBatch = col("doc_id") % 8 === 7
       val cands = bands.filter(isBatch).alias("x")
@@ -715,7 +711,7 @@ object Dedup {
     (s, d) => {
       val isBatch = col("doc_id") % 8 === 7
       val docs = Tables.documents(s, d)
-      writeMinhashIndexTables(docs.filter(!isBatch), sinkBase(d),
+      writeMinhashIndexTables(docs.filter(!isBatch), Sinks.sinkBase(d),
         "graft_minhash_bands", "graft_minhash_sets")
       crossPairsStored(docs.filter(isBatch),
         "graft_minhash_bands", "graft_minhash_sets")
@@ -725,13 +721,6 @@ object Dedup {
         .orderBy(col("doc_id"))
     },
     incremental.oracle)
-
-  /** Per-sfDir root for stored-index tables (the `sink_bucketed_
-    * roundtrip` layout convention): one directory per corpus so
-    * different scale factors never clobber each other's tables. */
-  private[graft] def sinkBase(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_sink/" +
-      d.replaceAll("[^A-Za-z0-9]", "_")
 
   /** Write `docs`' MinHash index as two parquet TABLES bucketed on
     * their probe-join keys — the band index on `(band, bkey)` and the
@@ -752,7 +741,7 @@ object Dedup {
       mode: String = "overwrite"): Unit = {
     val s = docs.sparkSession
     graft.functions.HashExpressions.register(s)
-    val sets = hashedShingleSetsOf(docs).localCheckpoint(false)
+    val sets = Cuts.cut(hashedShingleSetsOf(docs))
     writeMinhashIndexTablesFromSets(sets, minhashBands(sets), baseDir,
       bandsTable, setsTable, mode)
   }
@@ -792,7 +781,7 @@ object Dedup {
       bandsTable: String, setsTable: String): DataFrame = {
     val s = batchDocs.sparkSession
     graft.functions.HashExpressions.register(s)
-    val bs = hashedShingleSetsOf(batchDocs).localCheckpoint(false)
+    val bs = Cuts.cut(hashedShingleSetsOf(batchDocs))
     crossPairsStoredFromSets(bs, minhashBands(bs), bandsTable, setsTable)
   }
 
@@ -841,7 +830,7 @@ object Dedup {
     // the hashed set is ALREADY sorted-distinct, so it IS the class key
     // (hash-collision risk applies to the whole hashed-shingle family
     // identically — see hashedShingleSetsOf)
-    val sets = hashedShingleSetsOf(docs).localCheckpoint(false)
+    val sets = Cuts.cut(hashedShingleSetsOf(docs))
     val classes = sets.groupBy(col("hs")).agg(min(col("doc_id")).as("rep"))
     val members = sets.select(col("doc_id"), col("hs"))
       .join(classes, "hs")
@@ -851,7 +840,7 @@ object Dedup {
     val repSets = sets
       .join(classes.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("hs"))
-      .localCheckpoint(false)
+      .transform(Cuts.cut)
     val bands = minhashBands(repSets)
     val cands = bands.alias("x").join(bands.alias("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
@@ -891,8 +880,8 @@ object Dedup {
     * the batch's internal pairs. */
   def crossPairs(batchDocs: DataFrame, indexDocs: DataFrame): DataFrame = {
     graft.functions.HashExpressions.register(batchDocs.sparkSession)
-    val bs = hashedShingleSetsOf(batchDocs).localCheckpoint(false)
-    val is = hashedShingleSetsOf(indexDocs).localCheckpoint(false)
+    val bs = Cuts.cut(hashedShingleSetsOf(batchDocs))
+    val is = Cuts.cut(hashedShingleSetsOf(indexDocs))
     val cands = minhashBands(bs).alias("x")
       .join(minhashBands(is).alias("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey"))
@@ -951,7 +940,7 @@ object Dedup {
       // + 31-aggregate signature subtree FOUR times (lo/hi joins × two
       // sides), and broadcast sides can't reuse the stream side's
       // shuffle exchange
-      val sigs = graft.core.Cuts.cut(simhashSignatures(s, d)
+      val sigs = Cuts.cut(simhashSignatures(s, d)
         .withColumn("lo", col("simhash") % 65536L)
         .withColumn("hi", expr("simhash div 65536")))
       // the two band joins are disjoint by construction (the hi join only
@@ -1179,13 +1168,12 @@ object Dedup {
     // join-back on the array column — the array equi-join dominated a
     // first cut of this collapse at the replica tiers), materialized
     // once for the six consumers below (ctok twice, cross twice,
-    // members, min2); lazy localCheckpoint, RDD-owned blocks, no cache
-    // entry (the minhashPairs discipline)
+    // members, min2)
     val wTs = org.apache.spark.sql.expressions.Window.partitionBy(col("ts"))
     val classed = ts
       .withColumn("rep", min(col("doc_id")).over(wTs))
       .withColumn("cnt", count(lit(1)).over(wTs))
-      .localCheckpoint(false)
+      .transform(Cuts.cut)
     val members = classed.select(col("doc_id"), col("rep"), col("cnt"))
     val classes = classed.filter(col("doc_id") === col("rep"))
       .select(col("ts"), col("rep"), col("cnt"))
@@ -1254,7 +1242,7 @@ object Dedup {
       // child and re-executes it, so without the cut the whole
       // signature + band-join + prefix-join pipeline ran twice per
       // invocation; the cut materializes the ~1.5 k candidate rows once
-      graft.core.Cuts.cut(pairs
+      Cuts.cut(pairs
         .join(docs.select(col("doc_id").as("a"), col("p").as("pa")), "a")
         .join(docs.select(col("doc_id").as("b"), col("p").as("pb")), "b"))
         // sort BEFORE the DP projection: the range sort samples and

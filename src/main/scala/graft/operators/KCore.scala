@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import graft.core.Iterative
+import graft.core.{Cuts, Iterative}
 
 /** k-core decomposition by iterative peeling — the dense-subgraph
   * extraction every graph-mining pipeline runs (spam/bot rings, community
@@ -97,10 +97,10 @@ object KCore {
       roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None,
       maxRounds: Option[Int] = None)
       : DataFrame = {
-    val edges = edgesIn.localCheckpoint(false) // one materialization, reused
+    val edges = Cuts.cut(edgesIn) // one materialization, reused
     val baseDeg = edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))
       .select(col("u").as("node"), col("deg"))
-      .localCheckpoint(false) // once — never rewritten by the loop
+      .transform(Cuts.cut) // once — never rewritten by the loop
     var dec = baseDeg.limit(0)
       .select(col("node"), lit(0L).as("dec")) // cumulative, touched-only
     var decRelease: () => Unit = () => ()

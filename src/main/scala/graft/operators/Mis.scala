@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.apps.ShortestPath
-import graft.core.Iterative
+import graft.core.{Cuts, Iterative}
 
 /** Maximal independent set by Luby's algorithm (Luby 1986) over the
   * deterministic ring+skip graph — the SELECTION superstep shape
@@ -50,7 +50,7 @@ object Mis {
 
   def misOf(edgesIn: DataFrame, n: Long, maxRounds: Int): DataFrame = {
     val s = edgesIn.sparkSession
-    val edges = edgesIn.select(col("src"), col("dst")).localCheckpoint(false)
+    val edges = Cuts.cut(edgesIn.select(col("src"), col("dst")))
     var alive = Iterative.cutLineage(
       s.range(0, n, 1, 32).select(col("id")))
     var mis = alive.limit(0)

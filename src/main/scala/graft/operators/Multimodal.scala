@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.core.Cuts
 
 /** Multimodal-column plumbing (north-star extension): image/audio/video
   * payloads as opaque `binary` columns with typed metadata, processed by
@@ -616,14 +617,12 @@ object Multimodal {
     * connected; components recover the full duplicate groups, as in
     * `dedup_components`. */
   def phashEdges(ph0: DataFrame): DataFrame = {
-    // Materialize the hash table ONCE (lazy localCheckpoint — the
-    // minhashPairs discipline: RDD-owned blocks, no CacheManager entry,
-    // plan-only callers stay free). Without it every downstream branch
+    // Materialize the hash table ONCE. Without it every downstream branch
     // (member join + 4 band joins = 10 consumers) re-runs the full
     // upstream DECODE: the r7 plan audit showed 10 separate
     // scan→ImageIO-decode passes per run. Hashes are ~24 bytes/row —
     // negligible next to one saved raster decode of the corpus.
-    val ph = ph0.localCheckpoint(false)
+    val ph = Cuts.cut(ph0)
     val cls = ph.groupBy(col("hi"), col("lo"))
       .agg(min(col("media_id")).as("rep"))
     // post-agg the class table is already partitioned by (hi, lo) — the

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.core.Cuts
+import graft.sources.Sinks
 import graft.functions.TextFunctions._
 
 /** The end-to-end training-data curation pipeline (r6 verdict #7): the
@@ -88,7 +90,7 @@ object PipelineE2E {
     bootstrapStoresTok(s, docsAll,
       corpus.withColumn("t", tokens(col("text")))
         .select(col("doc_id"), col("day"), col("t"))
-        .localCheckpoint(false),
+        .transform(Cuts.cut),
       base)
 
   /** [[bootstrapStores]] from an already-tokenized `(doc_id, day, t)`
@@ -109,7 +111,7 @@ object PipelineE2E {
       docsAll: DataFrame, tokCorpus: DataFrame, base: String,
       overlapped: Seq[() => Unit]): Unit = {
     val day0 = tokCorpus.filter(col("day") === 0L)
-    val sets0 = Dedup.hashedShingleSetsOfTok(day0).localCheckpoint(false)
+    val sets0 = Cuts.cut(Dedup.hashedShingleSetsOfTok(day0))
     // ONE cheap action materializes the shared lazy checkpoints (corpus
     // tokens + day-0 shingle sets) every store below derives from — a
     // lazy checkpoint raced from two concurrent jobs could
@@ -186,10 +188,10 @@ object PipelineE2E {
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     graft.functions.HashExpressions.register(batch.sparkSession)
     val tok = batch.withColumn("t", tokens(col("text")))
-      .select(col("doc_id"), col("t")).localCheckpoint(false)
-    val sets = Dedup.hashedShingleSetsOfTok(tok).localCheckpoint(false)
-    val bands = Dedup.minhashBands(sets).localCheckpoint(false)
-    val bw = Dedup.windowHashesOfTok(tok, 50).localCheckpoint(false)
+      .select(col("doc_id"), col("t")).transform(Cuts.cut)
+    val sets = Cuts.cut(Dedup.hashedShingleSetsOfTok(tok))
+    val bands = Cuts.cut(Dedup.minhashBands(sets))
+    val bw = Cuts.cut(Dedup.windowHashesOfTok(tok, 50))
     (tok, sets, bands, bw)
   }
 
@@ -224,7 +226,7 @@ object PipelineE2E {
       .select(lit(dayNum).as("day"), col("doc_id"), col("n_tokens"),
         col("n_removed_tokens"), col("quality"), col("p_cal"),
         (col("reason") === "ok").as("keep"), col("reason"))
-      .localCheckpoint()
+      .transform(Cuts.barrier)
   }
 
   /** End-of-day store maintenance: append the batch's band/set rows and
@@ -263,7 +265,7 @@ object PipelineE2E {
       : DataFrame =
     bw.select(col("gh")).distinct()
       .join(s.table("graft_pipe_substr"), Seq("gh"), "left_anti")
-      .localCheckpoint()
+      .transform(Cuts.barrier)
 
   /** [[appendStoresShared]] with the window-hash delta already
     * materialized by [[newWindowHashes]]. */
@@ -316,7 +318,7 @@ object PipelineE2E {
   val pipelineIncrementalE2E = QueryDef("pipeline_incremental_e2e",
     (s, d) => {
       graft.functions.HashExpressions.register(s)
-      val base = Dedup.sinkBase(d)
+      val base = Sinks.sinkBase(d)
       val docsAll = Tables.documents(s, d)
       val corpus = withDay(docsAll.filter(col("doc_id") >= 50))
       // r16: ONE tokenize pass over the corpus shared by the bootstrap
@@ -330,11 +332,11 @@ object PipelineE2E {
       // which must see the previous days' writes, stay inside the loop.
       val tokCorpus = corpus.withColumn("t", tokens(col("text")))
         .select(col("doc_id"), col("day"), col("t"))
-        .localCheckpoint(false)
+        .transform(Cuts.cut)
       val tokDays = tokCorpus.filter(col("day") >= 1L)
-      val sets = Dedup.hashedShingleSetsOfTok(tokDays).localCheckpoint(false)
-      val bands = Dedup.minhashBands(sets).localCheckpoint(false)
-      val bw = Dedup.windowHashesOfTok(tokDays, 50).localCheckpoint(false)
+      val sets = Cuts.cut(Dedup.hashedShingleSetsOfTok(tokDays))
+      val bands = Cuts.cut(Dedup.minhashBands(sets))
+      val bw = Cuts.cut(Dedup.windowHashesOfTok(tokDays, 50))
       // r16 (§2.6): the ingest-day frames are pure functions of tokCorpus
       // — materialize them INSIDE the bootstrap's parallel write phase
       // (back-filling its idle slots) instead of serially during day 1's
@@ -536,20 +538,7 @@ object PipelineE2E {
           col("n_tokens"), col("cum_tokens"), col("budget_tokens"))
         .orderBy(col("source"), col("cum_tokens"))
     },
-    Some(s"""WITH RECURSIVE ${graft.operators.Dedup.minhashCtesSqlDuck(
-        "(SELECT doc_id, string_split(text,' ') AS t FROM documents)")},
-      cands AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-        FROM bands x JOIN bands y
-          ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
-      pairs AS (SELECT a, b FROM cands
-        JOIN sets sa ON sa.doc_id = a JOIN sets sb ON sb.doc_id = b
-        WHERE ${graft.operators.Dedup.jaccardSqlDuck("sa.hs", "sb.hs")} >= 0.5),
-      sym AS (SELECT a AS u, b AS v FROM pairs
-        UNION SELECT b, a FROM pairs),
-      reach(u, v) AS (SELECT u, v FROM sym
-        UNION SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u),
-      comp AS (SELECT u AS node, LEAST(u, MIN(v)) AS component
-        FROM reach GROUP BY u),
+    Some(s"""${Components.nearDupComponentsSqlDuck},
       pool AS (SELECT d.doc_id, d.source,
           COALESCE(c.component, d.doc_id) AS group_key,
           CAST(len(string_split(d.text,' ')) AS BIGINT) AS n_tokens,
@@ -591,7 +580,7 @@ object PipelineE2E {
       // and re-tokenized again for the quality filter). Every stage is a
       // pure function of `t`; expression trees from `t` onward are
       // unchanged, so the oracle pins value identity.
-      val tok = graft.core.Cuts.cut(
+      val tok = Cuts.cut(
         docs.withColumn("t", tokens(col("text")))
           .select(col("doc_id"), col("t")))
       // stage 1: strict decontamination against the doc_id < 50 holdout —
@@ -605,7 +594,7 @@ object PipelineE2E {
         .join(contaminated, Seq("doc_id"), "left_anti")
       // stage 2: near-dup dedup — greedy keep-first: the larger doc_id of
       // every verified pair is dropped (deterministic, anti-join shape)
-      val sets = graft.core.Cuts.cut(Dedup.hashedShingleSetsOfTok(s1))
+      val sets = Cuts.cut(Dedup.hashedShingleSetsOfTok(s1))
       val dropB = Dedup.minhashPairsFromSets(sets, Dedup.minhashBands(sets))
         .select(col("b").as("doc_id")).distinct()
       val s2 = s1.join(dropB, Seq("doc_id"), "left_anti")

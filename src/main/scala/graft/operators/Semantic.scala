@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.{QueryDef, Tables}
+import graft.core.Cuts
+import graft.sources.Sinks
 
 /** Embedding-space curation operators that COMPOSE the catalog's proven
   * kernels into the two remaining classic shapes:
@@ -182,7 +184,7 @@ object Semantic {
     // bounded sample, materialized once so the `rounds` assignment passes
     // don't re-run the top-n per round
     val samp = Similarity.trainingSample(e0, Similarity.TrainSampleN)
-      .localCheckpoint()
+      .transform(Cuts.barrier)
     val subs = subvectors(samp)
     val seedIds = samp.select(col("vec_id")).orderBy(col("vec_id"))
       .limit(PqK).collect().map(_.getLong(0)).toSeq
@@ -740,7 +742,7 @@ object Semantic {
   /** Persist the IVF-PQ index: centroids + codebook as plain tables
     * (8 / 512 rows), codes partitioned by cell id. */
   def writeIvfPqIndexTables(s: SparkSession, d: String): Unit = {
-    val base = Dedup.sinkBase(d)
+    val base = Sinks.sinkBase(d)
     // r17: the three writes executed the shared training pipeline
     // serially per table (the codes write re-derived assignment +
     // residuals + the codebook). Cut the residual relation once, force
@@ -749,7 +751,7 @@ object Semantic {
     // overlap the three independent table writes (§2.6).
     val e = ivfPqEmb(s, d)
     val coarse = ivfPqCoarseOf(e)
-    val rsubs = graft.core.Cuts.cut(ivfPqRsubsOf(e, coarse))
+    val rsubs = Cuts.cut(ivfPqRsubsOf(e, coarse))
     rsubs.count()
     val book = ivfPqBookOf(rsubs)
     val codes = ivfPqCodesOf(rsubs, book)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
+import graft.core.Cuts
 
 /** Approximate-nearest-neighbor / similarity search over the `embeddings`
   * table (north-star extension).
@@ -652,7 +653,7 @@ object Similarity {
       .withColumn("nrm", expr("sqrt(dot_f64(emb, emb))"))
     // bounded sample, materialized once (n×D doubles) so the `rounds`
     // assignment passes below don't re-run the top-n per round
-    val samp = trainingSample(e, TrainSampleN).localCheckpoint()
+    val samp = Cuts.barrier(trainingSample(e, TrainSampleN))
     var cents: Seq[(Long, Seq[Double])] = samp.orderBy(col("vec_id")).limit(k)
       .select(col("vec_id"), col("emb"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).sortBy(_._1).toSeq
@@ -1143,7 +1144,7 @@ object Similarity {
     * BOUNDARY-RECOMPUTE CUT (r15, −48% measured): the expensive
     * [[knnBase]] subtrees (the LSH bucket self-join `g0` and the
     * class-norm relation `en`) are lazily checkpointed ONCE before the
-    * loop. Every per-round `localCheckpoint` boundary downstream
+    * loop. Every per-round cut boundary downstream
     * breaks exchange reuse across it, so without the upfront cut
     * en/g0 recompute on each side of each round boundary —
     * 6.63 → 3.46 s bare-JVM min at sf0.1, and 46.7 → 38.7 s on a
@@ -1217,8 +1218,8 @@ object Similarity {
       knnLocalRows(s, base, knnLocalRefine(base, knnLocalBase(base, WorkK)), 3)
     } else {
       val (en0, g0) = knnBase(s, d, WorkK)
-      val en = en0.localCheckpoint(false)
-      var g = g0.localCheckpoint(false)
+      val en = Cuts.cut(en0)
+      var g = Cuts.cut(g0)
       for (_ <- 1 to RefineRounds) {
         // NN-descent candidates need the REVERSE neighborhood too (Dong
         // et al.'s B ∪ R) — forward-only two-hop stalls at recall ~0.65
@@ -1260,7 +1261,7 @@ object Similarity {
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= WorkK)
           .select(col("src"), col("dst"), col("cosine"))
-          .localCheckpoint(false) // cut: each round references g thrice
+          .transform(Cuts.loop) // cut: each round references g thrice
       }
       val w = Window.partitionBy(col("src"))
         .orderBy(col("cosine").desc, col("dst"))

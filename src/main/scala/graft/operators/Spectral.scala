@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.sources.Sinks
 
 /** Distributed power iteration: the top principal direction of the
   * embedding matrix (the leading eigenvector of XᵀX), by the A7
@@ -239,7 +240,7 @@ object Spectral {
       val tbl = "graft_spectral_qe"
       qeOf(s, d).write.mode("overwrite")
         .bucketBy(16, "vec_id").sortBy("vec_id", "j")
-        .option("path", s"${Dedup.sinkBase(d)}/$tbl").format("parquet")
+        .option("path", s"${Sinks.sinkBase(d)}/$tbl").format("parquet")
         .saveAsTable(tbl)
       // hybrid (r17): below the cutover the rounds still train FROM THE
       // STORED TABLE — one grouped collect of the written rows, so the

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
+import graft.core.Cuts
 import graft.functions.TextFunctions._
 
 /** Second wave of training-data-pipeline text operators: n-gram
@@ -197,7 +198,7 @@ object TextPipeline {
       val pairs = Tables.documents(s, d)
         .select(explode(tokens(col("text"))).as("w"), col("doc_id"))
         .distinct()
-        .localCheckpoint(false)
+        .transform(Cuts.cut)
       val df = pairs.groupBy(col("w")).agg(count(lit(1)).as("df"))
       val top = pairs
         .withColumn("rn", row_number().over(

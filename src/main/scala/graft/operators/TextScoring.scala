@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
+import graft.core.Cuts
 import graft.functions.TextFunctions._
 
 /** Corpus scoring operators: TF-IDF term relevance, a hashed linear
@@ -69,7 +70,7 @@ object TextScoring {
         // window's doc_id partitioning) — so without a cut the token
         // explode + window + collect ran three times (r16, guide §7.2;
         // exchange reuse can't help where there is no exchange)
-        .localCheckpoint(false)
+        .transform(Cuts.cut)
       val wstats = phrases
         .select(explode(col("ws")).as("w"), col("plen"))
         .groupBy(col("w")).agg(sum(col("plen")).as("deg"))
@@ -384,11 +385,11 @@ object TextScoring {
         .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
         .select(col("doc_id"), expr(s"roll_hash(w) % $QtBuckets").as("b"))
         .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
-        .localCheckpoint(false)
+        .transform(Cuts.cut)
       val lab = TextAnalysis.quality.fn(s, d)
         .select(col("doc_id"),
           when(col("quality") >= expr(QtLabelCut), 1L).otherwise(-1L).as("y"))
-        .localCheckpoint(false)
+        .transform(Cuts.cut)
       def wdf(w: Map[Long, Long]) =
         if (w.isEmpty) s.range(0).select(col("id").as("b"), col("id").as("wt"))
         else w.toSeq.sorted.toDF("b", "wt")
@@ -417,7 +418,7 @@ object TextScoring {
       val fs = scores(w)
         .select(col("doc_id"), col("sc").as("score"))
         .join(lab, "doc_id")
-        .localCheckpoint(false)
+        .transform(Cuts.cut)
       val cnts = fs.select(col("score").as("v"), col("y"))
         .groupBy(col("v"))
         .agg(sum(when(col("y") === 1L, 1L).otherwise(0L)).as("p"),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.core.Cuts
 
 /** Unigram-LM tokenizer training (SentencePiece-class; Kudo 2018) — the
   * third trained tokenizer beside word BPE and byte BPE: instead of
@@ -154,7 +155,7 @@ object Unigram {
       .select(explode(expr(chunksSql("raw"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .withColumn("len", length(col("word")).cast("long"))
-      .localCheckpoint(false)
+      .transform(Cuts.loop)
 
   /** Seed vocabulary (piece, cnt): every substring of length
     * 1..[[MaxPiece]] weighted by word freq; all single chars, plus the
@@ -213,7 +214,7 @@ object Unigram {
       .select(col("word"), col("o.i").as("i"), col("o.j").as("j"),
         col("o.piece").as("piece"))
       .join(broadcast(pc), Seq("piece"))
-      .localCheckpoint(false)
+      .transform(Cuts.loop)
     // forward DP, position-unrolled: dp(word, j, cost, pi, piece).
     // Each stage is LAZILY checkpointed: dp_j references dp_{j-1} twice
     // (through the union AND inside the stage join), so without the cut
@@ -233,7 +234,7 @@ object Unigram {
           col("i").as("pi"), col("piece").as("piece"))).as("m"))
         .select(col("word"), lit(j.toLong).as("j"), col("m.cost").as("cost"),
           col("m.pi").as("pi"), col("m.piece").as("piece"))
-      dpAll = dpAll.unionAll(step).localCheckpoint(false)
+      dpAll = dpAll.unionAll(step).transform(Cuts.loop)
     }
     val dp = dpAll
     // backward walk from j = len along the chosen-predecessor function
@@ -258,7 +259,7 @@ object Unigram {
     * a measured constant on the O(vocab·MaxPos)-per-round claim. */
   def emLearn(w: DataFrame, seed: Int = SeedPieces,
       prune: Int = TargetPieces): (DataFrame, DataFrame) = {
-    val v0 = seedVocab(w, seed).localCheckpoint(false)
+    val v0 = Cuts.loop(seedVocab(w, seed))
     val used1 = viterbiPieces(w, costed(v0))
     val c1 = used1.groupBy(col("piece")).agg(sum(col("freq")).as("cnt"))
     val chars1 = v0.filter(length(col("piece")) === 1).select(col("piece"))
@@ -266,8 +267,8 @@ object Unigram {
       .select(col("piece"), coalesce(col("cnt"), lit(0L)).as("cnt"))
     val multi1 = c1.filter(length(col("piece")) > 1)
       .orderBy(col("cnt").desc, col("piece")).limit(prune)
-    val v1 = chars1.unionAll(multi1).localCheckpoint(false)
-    val used2 = viterbiPieces(w, costed(v1)).localCheckpoint(false)
+    val v1 = Cuts.loop(chars1.unionAll(multi1))
+    val used2 = Cuts.loop(viterbiPieces(w, costed(v1)))
     val c2 = used2.groupBy(col("piece")).agg(sum(col("freq")).as("cnt"))
     val v2 = v1.select(col("piece"))
       .join(c2, Seq("piece"), "left")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.core.Cuts
 import graft.functions.TextFunctions.shinglesSql
 
 /** Winnowing document fingerprints (Schleimer, Wilkerson, Aiken 2003 —
@@ -65,7 +66,7 @@ object Winnowing {
       // referenced by the cull agg and both sides of the pair self-join;
       // the distinct reuses the windows' doc_id partitioning, so there is
       // no exchange for reuse to dedup — cut once (r16, guide §7.2)
-      .localCheckpoint(false)
+      .transform(Cuts.cut)
     val rare = fps.groupBy(col("f"))
       .agg(count(lit(1)).as("df"))
       .where(col("df") <= MaxDocFreq)

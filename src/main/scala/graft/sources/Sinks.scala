@@ -48,7 +48,7 @@ object Sinks {
     * for years of partitions. */
   val partitionOverwrite = QueryDef("sink_partition_overwrite",
     (s, d) => {
-      val path = sinkPath(d, "events_byday")
+      val path = s"${sinkBase(d)}/events_byday"
       val ev = Tables.events(s, d)
         .withColumn("day", to_date(col("ts")))
       ev.write.mode(SaveMode.Overwrite).partitionBy("day").parquet(path)
@@ -92,7 +92,7 @@ object Sinks {
     * schema change) is exactly what a lake cannot afford. */
   val schemaEvolution = QueryDef("source_schema_evolution",
     (s, d) => {
-      val path = sinkPath(d, "orders_evolving")
+      val path = s"${sinkBase(d)}/orders_evolving"
       val o = Tables.orders(s, d)
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -117,12 +117,14 @@ object Sinks {
           THEN 1 ELSE 0 END) AS BIGINT) AS n_priority
       FROM orders GROUP BY 1 ORDER BY snap"""))
 
-  /** Deterministic sink location per source dir (same dir → same path, so
-    * repeated invocations overwrite instead of accumulating). */
-  private def sinkPath(d: String, name: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_sink/$tag/$name"
-  }
+  /** The one sink root per source dir, `java.io.tmpdir/graft_sink/<tag>`
+    * with `tag` = `d` with every non-alphanumeric character mapped to `_`.
+    * Deterministic (same dir → same path, so repeated invocations
+    * overwrite instead of accumulating) and one directory per corpus, so
+    * different scale factors never clobber each other's tables. */
+  private[graft] def sinkBase(d: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_sink/" +
+      d.replaceAll("[^A-Za-z0-9]", "_")
 
   /** Small-file compaction as an oracle-backed entry: fragment lineitem
     * into 64 undersized files (the streaming-ingest reality [[compact]]
@@ -137,7 +139,7 @@ object Sinks {
   val compaction = QueryDef("sink_compaction",
     (s, d) => {
       val target = 100000L
-      val frag = sinkPath(d, "lineitem_fragmented")
+      val frag = s"${sinkBase(d)}/lineitem_fragmented"
       val src = Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           col("l_extendedprice"))
@@ -147,7 +149,7 @@ object Sinks {
       // re-counted from the fragmented copy — one fewer sequential job
       val (rows, _) = graft.core.Par.both(src.count(),
         src.repartition(64).write.mode(SaveMode.Overwrite).parquet(frag))
-      val out = sinkPath(d, "lineitem_compacted")
+      val out = s"${sinkBase(d)}/lineitem_compacted"
       val planned = compact(s, frag, out, target, knownRows = Some(rows))
       s.read.parquet(out)
         .groupBy(col("l_returnflag"))
@@ -177,7 +179,7 @@ object Sinks {
     * sums per the engine-wide convention. */
   val bucketedRoundtrip = QueryDef("sink_bucketed_roundtrip",
     (s, d) => {
-      val path = sinkPath(d, "lineitem_bucketed")
+      val path = s"${sinkBase(d)}/lineitem_bucketed"
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           col("l_extendedprice"))
@@ -226,7 +228,7 @@ object Sinks {
       .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L
 
   def writeRangeLayout(s: SparkSession, d: String): String = {
-    val path = sinkPath(d, "lineitem_range")
+    val path = s"${sinkBase(d)}/lineitem_range"
     Tables.lineitem(s, d)
       // the time-slice key is stored as INT64 epoch micros, not as a
       // timestamp: measured on this Spark build (4.1.2), pushed
@@ -323,7 +325,7 @@ object Sinks {
     * cannot give the second column. 1 MiB row groups keep the skip
     * granularity finer than the 8 range files. */
   def writeZorderLayout(s: SparkSession, d: String): String = {
-    val path = sinkPath(d, "lineitem_zorder")
+    val path = s"${sinkBase(d)}/lineitem_zorder"
     val base = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_partkey"),
         unix_date(col("l_shipdate").cast("date")).cast("long").as("ship_day"),
@@ -389,7 +391,7 @@ object Sinks {
     * aggregate over the original parquet — the oracle's view. */
   val csvRoundtrip = QueryDef("source_csv_roundtrip",
     (s, d) => {
-      val path = sinkPath(d, "supplier_csv")
+      val path = s"${sinkBase(d)}/supplier_csv"
       val orig = Tables.supplier(s, d)
       orig.write.mode(SaveMode.Overwrite)
         .option("header", "true").csv(path)
@@ -414,7 +416,7 @@ object Sinks {
     * (columnar interop). */
   val orcRoundtrip = QueryDef("source_orc_roundtrip",
     (s, d) => {
-      val path = sinkPath(d, "orders_orc")
+      val path = s"${sinkBase(d)}/orders_orc"
       Tables.orders(s, d).write.mode(SaveMode.Overwrite).orc(path)
       s.read.orc(path)
         .groupBy(col("o_orderstatus"))
@@ -435,7 +437,7 @@ object Sinks {
     * typing exactly (Spark emits shortest-roundtrip doubles here too). */
   val jsonRoundtrip = QueryDef("source_json_roundtrip",
     (s, d) => {
-      val path = sinkPath(d, "part_json")
+      val path = s"${sinkBase(d)}/part_json"
       val orig = Tables.part(s, d)
       orig.write.mode(SaveMode.Overwrite).json(path)
       s.read.schema(orig.schema).json(path)

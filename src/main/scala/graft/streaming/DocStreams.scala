@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.core.Cuts
 
 /** Streaming surface of the corpus-curation operators: documents arrive as
   * an unbounded stream (file source in production) and are checked against
@@ -149,7 +150,7 @@ object DocStreams {
     * state lives in the two parquet stores, read and rewritten per
     * batch, so a crashed query resumes from the checkpoint offsets and
     * finds consistent stores from the last completed batch. The label
-    * update is materialized eagerly (localCheckpoint) BEFORE the
+    * update is materialized eagerly ([[Cuts.barrier]]) BEFORE the
     * overwrite — the plan reads the path it is about to replace.
     * Production note: the overwrite/append pair is not atomic with the
     * checkpoint commit; a real deployment puts the two stores in a
@@ -163,7 +164,7 @@ object DocStreams {
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val s = batch0.sparkSession
         val batch = batch0.select(col("doc_id"), col("text"))
-          .localCheckpoint(true)
+          .transform(Cuts.barrier)
         val corpus = s.read.parquet(corpusDir)
           .select(col("doc_id"), col("text"))
         val stored = s.read.parquet(labelsDir)
@@ -174,7 +175,7 @@ object DocStreams {
             .select(col("a"), col("b")))
         val updated = graft.operators.Components
           .incrementalLabels(stored, newEdges)
-          .localCheckpoint(true) // materialize before overwriting our input
+          .transform(Cuts.barrier) // materialize before overwriting our input
         updated.write.mode("overwrite").parquet(labelsDir)
         batch.write.mode("append").parquet(corpusDir)
         sink(updated, batchId)
@@ -210,7 +211,7 @@ object DocStreams {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val s = batch0.sparkSession
-        val batch = batch0.localCheckpoint(true)
+        val batch = Cuts.barrier(batch0)
         // shared per-batch frames (tokenize/shingle/band/window ONCE,
         // r16): materialized by the report's eager checkpoint, reused
         // by the append — same sharing as the batch entry's day loop

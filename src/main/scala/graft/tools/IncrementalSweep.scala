@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 import graft.{Local, Tables}
 import graft.operators.{Components, Dedup}
+import graft.sources.Sinks
 
 /** Measures the claim `components_incremental_stored` exists to make:
   * per-ingest cost is proportional to the BATCH, not the corpus. The
@@ -44,7 +45,7 @@ object IncrementalSweep {
     mults.foreach { mult =>
       val dir = ScaleSmoke.scaledDir(spark, src, mult)
       val oldDocs = Tables.documents(spark, dir).filter(!isBatch)
-      val base = Dedup.sinkBase(dir)
+      val base = Sinks.sinkBase(dir)
 
       val b0 = System.nanoTime()
       Dedup.writeMinhashIndexTables(oldDocs, base,

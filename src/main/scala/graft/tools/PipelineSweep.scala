@@ -2,7 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 import graft.{Local, Tables}
-import graft.operators.{Dedup, PipelineE2E}
+import graft.operators.PipelineE2E
+import graft.sources.Sinks
 
 /** Measures `pipeline_incremental_e2e`'s steady-state claim: per-day
   * cost is proportional to the BATCH, not the stored corpus. The
@@ -47,7 +48,7 @@ object PipelineSweep {
     def runTier(dir: String, label: String, report: Boolean): Unit = {
       val docsAll = Tables.documents(spark, dir)
       val corpus = PipelineE2E.withDay(docsAll.filter(col("doc_id") >= 50))
-      val base = Dedup.sinkBase(dir)
+      val base = Sinks.sinkBase(dir)
       val b0 = System.nanoTime()
       PipelineE2E.bootstrapStores(spark, docsAll, corpus, base)
       val bootstrapSec = (System.nanoTime() - b0) / 1e9

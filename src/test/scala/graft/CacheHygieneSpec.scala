@@ -6,8 +6,9 @@ package graft
   * a library caller invoking the fn repeatedly accumulates pinned blocks
   * until heap pressure (the round-2 sweep-inflation bug, harness-side
   * only until now). Queries that genuinely need to materialize a shared
-  * subtree use `localCheckpoint` instead — blocks owned by the RDD and
-  * freed by the ContextCleaner on GC (see dedup_minhash_lsh). This spec
+  * subtree go through `graft.core.Cuts`, whose default `local` mode
+  * leaves blocks owned by the RDD and freed by the ContextCleaner on GC.
+  * This spec
   * makes the harnesses' defensive `clearCache()` belt-and-braces rather
   * than load-bearing. It reads the shared [[CatalogRuns]] pass. */
 class CacheHygieneSpec extends SparkSpec {

@@ -37,7 +37,9 @@ class EmptyInputSweepSpec extends SparkSpec {
 
   test("every catalog entry executes on an all-empty corpus") {
     val failures = scala.collection.mutable.ListBuffer.empty[String]
-    graft.queries.Registry.all.foreach { q =>
+    // the sink entries write under a tree named after the temp corpus
+    // dir, outside it: delete that tree with the corpus
+    try graft.queries.Registry.all.foreach { q =>
       try {
         val n = q.fn(spark, emptyDir).count()
         assert(n >= 0)
@@ -46,7 +48,8 @@ class EmptyInputSweepSpec extends SparkSpec {
           val root = Option(e.getCause).getOrElse(e)
           failures += s"${q.name}: ${root.getClass.getSimpleName} ${String.valueOf(root.getMessage).take(120)}"
       }
-    }
+    } finally SparkSpec.deleteRecursively(
+      java.nio.file.Paths.get(graft.sources.Sinks.sinkBase(emptyDir)))
     assert(failures.isEmpty,
       s"${failures.size} entries crash on empty input:\n${failures.mkString("\n")}")
   }

@@ -199,7 +199,7 @@ class FileStreamSpec extends SparkSpec {
     val docsAll = Tables.documents(spark, d)
     val corpus = graft.operators.PipelineE2E.withDay(
       docsAll.filter(col("doc_id") >= 50))
-    val base = graft.operators.Dedup.sinkBase(d)
+    val base = graft.sources.Sinks.sinkBase(d)
     graft.operators.PipelineE2E.bootstrapStores(spark, docsAll, corpus, base)
     // one FILE per ingest day, landing in day order — a microbatch must
     // hold a whole day (see curationPipelineStream's doc)

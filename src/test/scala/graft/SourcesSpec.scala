@@ -179,9 +179,8 @@ class SourcesSpec extends SparkSpec {
     // first (full) write
     val base = graft.SparkEntry.queries("sink_partition_overwrite")(spark, d)
       .collect()
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
     val root = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft_sink/$tag/events_byday")
+      s"${graft.sources.Sinks.sinkBase(d)}/events_byday")
     def fileSet(dir: java.io.File): Set[String] =
       Option(dir.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.endsWith(".parquet"))
