@@ -28,7 +28,9 @@ object NumberCount {
 
   /** Seeded data generator (≅ gen_ints, main.cpp:23-29). value(i) =
     * high-bits of LCG²(i + seed) mod `distinct` — deterministic for a
-    * fixed seed, independent of partitioning. */
+    * fixed seed, independent of partitioning. The high bits are 15 (bits
+    * 16-30 of a 31-bit LCG), so a `distinct` above 32,768 saturates at
+    * 32,768 keys. */
   def genInts(spark: SparkSession, n: Long, distinct: Int = 100,
       seed: Long = 1000, partitions: Int = 32): DataFrame = {
     val h1 = ((col("id") + lit(seed)) * lit(A) + lit(C)) % lit(M)

@@ -9,9 +9,9 @@ import graft.apps.{NumberCount, ShortestPath}
 /** The reference's own capability surface as engine queries: the generic
   * full-list MapReduce path (firebird.h F3-F5), count-per-key (number_count)
   * and min-per-key (shortest_path's reduce), plus the iterative SSSP app.
-  * These deliberately run through `flatMap → groupByKey → flatMapGroups` /
-  * `Aggregator` so the driver's verify exercises the MR layer, not just
-  * relational shortcuts.
+  * These deliberately run through `MapReduce.run` (full-list reduce) /
+  * `MapReduce.runAggregated` (`Aggregator`) so the driver's verify
+  * exercises the MR layer, not just relational shortcuts.
   */
 object MapReduceQueries {
 
@@ -101,9 +101,9 @@ object MapReduceQueries {
     Some("""SELECT CAST(l_quantity AS INT) AS k, COUNT(*) AS cnt
       FROM lineitem GROUP BY 1 ORDER BY 1"""))
 
-  /** A6 min-per-key via the associative fast path (Aggregator → partial
-    * aggregation, the combiner the reference lacks). Min of doubles picks an
-    * existing value — exact in any engine. */
+  /** A6 min-per-key via the associative fast path (one `Aggregator`
+    * buffer per key and map task, the combiner the reference lacks). Min
+    * of doubles picks an existing value — exact in any engine. */
   val mrMinPerKey = QueryDef("mr_min_per_key",
     (s, d) => {
       import s.implicits._

@@ -61,6 +61,12 @@ object SparkSpec {
   }
 
   lazy val session: SparkSession = {
+    // The suites run in a JVM forked by sbt. If sbt is killed, nothing
+    // stops the fork, which would run on as an orphan; so it halts as
+    // soon as the process that started it exits.
+    ProcessHandle.current().parent().ifPresent { p =>
+      p.onExit().thenRun(() => Runtime.getRuntime.halt(1)); ()
+    }
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
