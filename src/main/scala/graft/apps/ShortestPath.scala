@@ -1,12 +1,10 @@
 package graft.apps
 
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.LongMap
+import graft.core.{Csr, Superstep}
 
 /** The reference's second sample app: iterative single-source shortest path
   * (`/root/reference/sample_apps/shortest_path/main.cpp`).
@@ -18,22 +16,14 @@ import scala.collection.mutable.LongMap
   * a driver loop feeds the reduce output back as the next frontier until it
   * is empty (main.cpp:178-188).
   *
-  * Spark-first re-expression: the CSR becomes one [[Csr]] per edge
-  * partition, hash-partitioned by `src`; the shared `dist[]` becomes one
-  * node→dist map per partition under the same partitioner, so a level's
-  * frontier probes its own partition's CSR and only the candidates are
-  * shuffled; the min reduce is `reduceByKey(min)`; the improvement guard
-  * filters candidates against the dist maps; the fixpoint test is an
+  * Spark-first re-expression: the frontier loop is a program for
+  * [[graft.core.Superstep]], which holds the CSR as one [[graft.core.Csr]]
+  * per edge partition, hash-partitioned by `src`, and the shared `dist[]`
+  * as one node→dist map per partition under the same partitioner, so a
+  * level's frontier probes its own partition's CSR and only the
+  * candidates are shuffled. The min reduce is the program's combine; the
+  * improvement guard is its activation test; the fixpoint test is an
   * empty improved set.
-  *
-  * Scale notes for the 100 TB target:
-  *   - edges are the big side: they are indexed once per solve and never
-  *     reshuffled; each level reads only the frontier's out-edges.
-  *   - state is cut every batch (`localCheckpoint`), so lineage stays one
-  *     batch deep over hundreds of supersteps.
-  *   - k relaxation levels run per Spark action (frontier batching, see
-  *     [[distributedSssp]]) so the driver round-trip count is diameter/k,
-  *     not diameter.
   */
 object ShortestPath {
 
@@ -154,109 +144,36 @@ object ShortestPath {
     } else distributedSssp(e, source)
   }
 
-  /** Stats-estimated bytes of edge rows per index partition: 8 MB ≈
-    * 250 k (src, dst, weight) rows. Every level pays a fixed cost per
-    * partition, so a small graph runs at its own parallelism instead of
-    * the conf `spark.sql.shuffle.partitions`, which stays the cap. */
-  private val SsspBytesPerPart = 8L << 20
-
   /** Rows of [[distributedSssp]]'s result. */
   private val DistSchema = StructType(Seq(
     StructField("node", LongType), StructField("dist", DoubleType)))
 
   /** The fully distributed superstep loop (reference main.cpp:178-188
-    * re-expressed; see class doc). Exercised directly by tests, the
-    * `sssp_synthetic` catalog entry and the benchmark.
+    * re-expressed; see class doc), run by [[graft.core.Superstep]].
+    * Exercised directly by tests, the `sssp_synthetic` catalog entry and
+    * the benchmark.
     *
-    * Index, built once per solve: `edges` hash-partitioned by `src` into
-    * one [[Csr]] per partition, persisted. Vertex state is one node→dist
-    * map per partition under the same partitioner, so every level joins
-    * through `zipPartitions`: nothing but the candidates is shuffled.
-    *
-    * Frontier batching: `batchLevels` relaxation levels run in ONE
-    * action. Level j maps each frontier node through its partition's CSR
-    * to `(dst, dist + w)` (main.cpp:32-46), takes the min per node with a
-    * map-side combine (main.cpp:48-56), and drops every candidate that
-    * does not beat the batch-start dist (the improvement guard,
-    * main.cpp:41). Dropping is safe because the batch-start dist holds
-    * only values whose out-edges were already relaxed. The survivors are
-    * level j+1's frontier. After the last level one co-partitioned fold
-    * merges all levels' survivors into the dist maps; the nodes it
-    * improved are the next batch's frontier. The fold is cut with
-    * `localCheckpoint`, so lineage stays one batch deep. On a real
-    * cluster swap it for `checkpoint` against a reliable dir to also
-    * survive executor loss.
+    * The program: the source starts at dist 0; a frontier node sends
+    * `dist + w` along each out-edge (main.cpp:32-46); messages fold by min
+    * (main.cpp:48-56); a node joins the frontier when its dist improves
+    * (the improvement guard, main.cpp:41). `batchLevels` relaxation levels
+    * run per batch. Guarding a level against the batch-start dist is safe
+    * because that dist holds only values whose out-edges were already
+    * relaxed.
     *
     * Jobs are described `graft:sssp/index` and `graft:sssp/batch-<n>`. */
   def distributedSssp(edges: DataFrame, source: Long,
-      batchLevels: Int = 8): DataFrame = {
-    require(batchLevels >= 1, s"batchLevels must be at least 1, not $batchLevels")
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
-      col("weight").cast("double"))
-    // partition count from the optimizer's size estimate (an exact
-    // count would cost a pass); floor 2 so every test crosses partitions
-    val estBytes = e.queryExecution.optimizedPlan.stats.sizeInBytes
-    val conf = spark.sessionState.conf.numShufflePartitions
-    val part = new HashPartitioner(math.max(2L,
-      ((estBytes + SsspBytesPerPart - 1) / SsspBytesPerPart)
-        .min(BigInt(conf)).toLong).toInt)
-
-    val csr = graft.core.Jobs.described(sc, "graft:sssp/index") {
-      val idx = e.rdd.flatMap { r =>
-        if (r.anyNull) None else Some((r.getLong(0), (r.getLong(1), r.getDouble(2))))
-      }.partitionBy(part)
-        .mapPartitions(it => Iterator(Csr(it)), preservesPartitioning = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      idx.count()
-      idx
-    }
-    // (dist map, improved nodes) per partition; the source starts both
-    val home = part.getPartition(source)
-    var state: RDD[(LongMap[Double], Array[(Long, Double)])] =
-      csr.mapPartitionsWithIndex((i, _) => Iterator(
-        if (i == home) (LongMap(source -> 0.0), Array(source -> 0.0))
-        else (LongMap.empty[Double], Array.empty[(Long, Double)])),
-        preservesPartitioning = true)
-    var active = 1L
-    var batch = 0
-    while (active > 0) {
-      batch += 1
-      val dist = state.mapPartitions(_.map(_._1), preservesPartitioning = true)
-      def level(frontier: RDD[(Long, Double)]): RDD[(Long, Double)] =
-        frontier.zipPartitions(csr) { (f, g) =>
-          val idx = g.next()
-          f.flatMap { case (n, d) => idx.relax(n, d) }
-        }.reduceByKey(part, math.min(_, _))
-          .zipPartitions(dist, preservesPartitioning = true) { (c, ds) =>
-            val cur = ds.next()
-            c.filter { case (n, d) => d < cur.getOrElse(n, Double.PositiveInfinity) }
-          }
-      val levels = Seq.iterate(level(state.mapPartitions(
-        _.flatMap(_._2), preservesPartitioning = true)), batchLevels)(level)
-      val next = sc.union(levels).zipPartitions(state,
-          preservesPartitioning = true) { (c, st) =>
-        val cur = st.next()._1.clone()
-        val improved = LongMap.empty[Double]
-        c.foreach { case (n, d) =>
-          if (d < cur.getOrElse(n, Double.PositiveInfinity)) {
-            cur(n) = d
-            improved(n) = d
-          }
-        }
-        Iterator((cur, improved.toArray))
-      }.localCheckpoint()
-      active = graft.core.Jobs.described(sc, s"graft:sssp/batch-$batch") {
-        next.map(_._2.length.toLong).fold(0L)(_ + _)
-      }
-      state.unpersist(false) // its successor is materialized
-      state = next
-    }
-    csr.unpersist(false)
-    spark.createDataFrame(
-      state.flatMap(_._1.iterator.map { case (n, d) => Row(n, d) }), DistSchema)
-  }
+      batchLevels: Int = 8): DataFrame =
+    Superstep.run("sssp", edges, new Superstep.Program[Double, Double] {
+      def zero = Double.PositiveInfinity
+      def seed(csr: Csr, home: Long => Boolean) =
+        if (home(source)) (LongMap(source -> 0.0), Array(source -> 0.0))
+        else (LongMap.empty[Double], Array.empty[(Long, Double)])
+      def send(d: Double, dst: Long, w: Double) = d + w
+      def combine(a: Double, b: Double) = math.min(a, b)
+      def merge(d: Double, m: Double) = math.min(d, m)
+      def activated(old: Double, now: Double) = now < old
+    }, batchLevels, DistSchema)._1
 
   /** Serial Dijkstra oracle (≅ reference main.cpp:108-140) — test-only. */
   def dijkstra(edges: Seq[(Long, Long, Double)], source: Long): Map[Long, Double] = {
@@ -280,34 +197,5 @@ object ShortestPath {
       }
     }
     dist.toMap
-  }
-}
-
-/** One partition's edges in compressed sparse row form (the reference's
-  * `offsets`/`edges` arrays, main.cpp:32-46): `srcs` sorted and distinct;
-  * the out-edges of `srcs(i)` are `offsets(i) until offsets(i + 1)` in
-  * `dsts` and `weights`. */
-private[apps] final class Csr(srcs: Array[Long], offsets: Array[Int],
-    dsts: Array[Long], weights: Array[Double]) extends Serializable {
-
-  /** `(dst, d + weight)` for each out-edge of `src`; none if it has none. */
-  def relax(src: Long, d: Double): Iterator[(Long, Double)] = {
-    val i = java.util.Arrays.binarySearch(srcs, src)
-    if (i < 0) Iterator.empty
-    else Iterator.range(offsets(i), offsets(i + 1)).map(j => (dsts(j), d + weights(j)))
-  }
-}
-
-private[apps] object Csr {
-  def apply(edges: Iterator[(Long, (Long, Double))]): Csr = {
-    val es = edges.toArray.sortBy(_._1)
-    val srcs = Array.newBuilder[Long]
-    val offsets = Array.newBuilder[Int]
-    for (j <- es.indices if j == 0 || es(j)._1 != es(j - 1)._1) {
-      srcs += es(j)._1
-      offsets += j
-    }
-    offsets += es.length
-    new Csr(srcs.result(), offsets.result(), es.map(_._2._1), es.map(_._2._2))
   }
 }

@@ -2,8 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.DataFrame
 
-/** Shared support for superstep driver loops (the A7 pattern:
-  * SSSP, star connected components, Lloyd training, BPE merges). */
+/** Shared support for DataFrame superstep driver loops: star connected
+  * components, Lloyd training, BPE merges. The vertex-centric loops (SSSP,
+  * the k-core peel) run on RDDs in [[Superstep]] instead. */
 object Iterative {
 
   /** Cut lineage AND stats between supersteps.
@@ -33,47 +34,5 @@ object Iterative {
   def cutLineage(df: DataFrame): DataFrame = {
     val ck = df.localCheckpoint(true)
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
-
-  /** [[cutLineage]] plus a release handle that frees the checkpoint's
-    * storage blocks.
-    *
-    * A localCheckpointed RDD's truncated lineage cannot recompute, so
-    * by default every superstep's cut state is retained until the
-    * ContextCleaner notices the RDD is unreachable — which needs a
-    * driver GC cycle and, in a long peel/propagate loop, means
-    * iteration-scaled storage pinned in the executors (the k-core
-    * 6.4M-node cascade died at the default 8 GiB local heap exactly
-    * this way). When the LOOP knows round i−1's state is dead the
-    * moment round i's checkpoints are materialized, it can release the
-    * blocks eagerly instead of waiting for GC.
-    *
-    * The handle MUST only be invoked once every frame derived from the
-    * returned DataFrame has been fully materialized (checkpointed or
-    * counted): after release, any re-read throws — truncated lineage
-    * has nothing to recompute from.
-    *
-    * Misuse guard (r13 advice): a post-release read surfaces as an
-    * opaque `block rdd_N_p not found` task failure far from the call
-    * site, so the release closure RENAMES the internal RDDs first —
-    * the Spark UI / event-log entry for rdd_N then reads "RELEASED by
-    * cutLineageReleasable…", turning the block id in the error into a
-    * pointer at this contract instead of a mystery. Releasing twice is
-    * a no-op. KCoreSpec's release-handle test pins both behaviors. */
-  def cutLineageReleasable(df: DataFrame): (DataFrame, () => Unit) = {
-    val ck = df.localCheckpoint(true)
-    val internal = ck.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-    val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-    (ck.sparkSession.createDataFrame(ck.rdd, ck.schema),
-      () => if (released.compareAndSet(false, true)) {
-        internal.foreach { r =>
-          r.setName(s"RELEASED by Iterative.cutLineageReleasable (rdd " +
-            s"${r.id}) — a 'block rdd_${r.id}_* not found' failure means " +
-            "something read this state after its loop released it")
-          r.unpersist(false)
-        }
-      })
   }
 }

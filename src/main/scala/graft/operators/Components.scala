@@ -9,20 +9,15 @@ import graft.sources.Sinks
   * that turns pairwise dedup verdicts into keep/drop groups (a near-dup
   * *cluster* keeps one representative, not one survivor per pair).
   *
-  * Spark-first shape: iterative min-label propagation — each superstep
-  * every node takes the min of its own label and its neighbors' labels;
-  * fixpoint when no label changes. Same driver-loop pattern as
-  * [[graft.apps.ShortestPath]] (the reference's A7 superstep shape),
-  * with an eager lineage+stats cut per superstep (Iterative.cutLineage)
-  * to stop plan and stats-estimate growth.
+  * Spark-first shape: large-star/small-star rounds (Kiveris et al.,
+  * "Connected Components in MapReduce and Beyond", [[starLoop]]). Each
+  * round is join+aggregate passes over the shrinking edge set with an
+  * eager lineage+stats cut (Iterative.cutLineage), so plans and stats
+  * estimates do not grow across rounds.
   *
-  * Scale stance: label propagation converges in O(component diameter)
-  * supersteps; near-dup components are overwhelmingly tiny (pairs/triples),
-  * so a handful of iterations suffice at any corpus size. Each superstep is
-  * one shuffle join on node id. For adversarial long-chain graphs the
-  * upgrade path is the large-star/small-star algorithm (Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond"), which converges in
-  * O(log n) supersteps with the same join-only building blocks.
+  * Scale stance: the rounds are O(log n) on any graph shape, so even an
+  * adversarial long chain needs few; min-label propagation would need
+  * O(component diameter) supersteps.
   */
 object Components {
 
@@ -177,7 +172,7 @@ object Components {
   /** Large-star/small-star connected components (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond") — the adversarial-
     * chain-proof variant: converges in O(log n) rounds on ANY graph shape,
-    * where [[connectedComponents]]' label propagation needs O(diameter).
+    * where min-label propagation needs O(diameter).
     * Each round is two join+aggregate passes over the (shrinking) edge
     * set; when the set stabilizes it is a union of stars whose centers
     * are the component minima.
@@ -189,7 +184,7 @@ object Components {
     *    re-points its smaller neighbors (and itself) at the minimum.
     *
     * Returns `(node, component)`; component = min node id reachable.
-    * ComponentsSpec proves equality with label propagation and that a
+    * PipelineOpsSpec proves equality with a serial union-find and that a
     * 256-node path graph converges in ≤ 12 rounds (vs 255 supersteps). */
   def connectedComponentsStar(edges: DataFrame): DataFrame =
     starLoop(edges)._1
@@ -236,38 +231,6 @@ object Components {
     val centers = e.select(col("v").as("node")).distinct()
       .withColumn("component", col("node"))
     (children.unionAll(centers).distinct(), rounds)
-  }
-
-  /** Min-label propagation over an undirected edge list `(a, b)`.
-    * Returns `(node, component)` with component = min node id reachable.
-    * O(diameter) supersteps — fine for near-dup clusters (tiny diameters);
-    * [[connectedComponentsStar]] is the general-graph scale path. */
-  def connectedComponents(edges: DataFrame): DataFrame = {
-    val sym = edges.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
-      .persist()
-    var labels = graft.core.Iterative.cutLineage(
-      sym.select(col("u").as("node")).distinct()
-        .withColumn("label", col("node")))
-    var changed = 1L
-    while (changed > 0) {
-      val nbrMin = sym
-        .join(labels.select(col("node").as("v"), col("label").as("vlab")), "v")
-        .groupBy(col("u")).agg(min(col("vlab")).as("nmin"))
-        .select(col("u").as("node"), col("nmin"))
-      val next = labels
-        .join(nbrMin, Seq("node"), "left_outer")
-        .select(col("node"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-      val nextCk = graft.core.Iterative.cutLineage(next)
-      changed = nextCk.alias("n")
-        .join(labels.alias("o"), "node")
-        .where(col("n.label") < col("o.label"))
-        .count()
-      labels = nextCk
-    }
-    sym.unpersist()
-    labels.withColumnRenamed("label", "component")
   }
 
   /** Components of the MinHash-LSH near-dup graph (pairs verified at

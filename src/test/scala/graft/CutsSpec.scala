@@ -67,7 +67,7 @@ class CutsSpec extends SparkSpec {
   test("no operator calls localCheckpoint outside the cut seam") {
     val root = Paths.get("src/main/scala/graft")
     assert(Files.isDirectory(root), s"run from the project root: $root")
-    val allowed = Seq("core/", "apps/ShortestPath.scala", "tools/")
+    val allowed = Seq("core/", "tools/")
     val files = Files.walk(root)
     val sources = try files.iterator().asScala.map(p => root.relativize(p))
         .map(_.toString.replace('\\', '/')).filter(_.endsWith(".scala")).toList

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.KCore
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** k-core peeling: serial-model parity, cascade behavior, and the
   * oracle-bound convergence assertion (the unrolled DuckDB oracle is
@@ -9,19 +10,39 @@ import org.apache.spark.sql.functions._
 class KCoreSpec extends SparkSpec {
   import spark.implicits._
 
-  private def serialKcore(edges: Set[(Long, Long)], k: Int)
-      : Map[Long, Int] = {
-    var alive = edges
-    var changed = true
-    while (changed) {
-      val deg = alive.groupBy(_._1).map { case (u, es) => u -> es.size }
-      val keep = deg.filter(_._2 >= k).keySet
-      val next = alive.filter { case (u, v) => keep(u) && keep(v) }
-      changed = next != alive
-      alive = next
+  /** Serial synchronous peel: each round deletes every alive node whose
+    * residual degree (edges to alive nodes) is below k. Returns the core's
+    * residual degrees and the number of rounds that deleted a node. */
+  private def serialPeel(edges: Set[(Long, Long)], k: Int)
+      : (Map[Long, Int], Int) = {
+    var alive = edges.map(_._1)
+    def deg: Map[Long, Int] = alive.iterator.map(u => u -> 0).toMap ++
+      edges.filter { case (u, v) => alive(u) && alive(v) }
+        .groupBy(_._1).map { case (u, es) => u -> es.size }
+    var rounds = 0
+    var dying = deg.filter(_._2 < k).keySet
+    while (dying.nonEmpty) {
+      rounds += 1
+      alive --= dying
+      dying = deg.filter(_._2 < k).keySet
     }
-    alive.groupBy(_._1).map { case (u, es) => u -> es.size }
+    (deg, rounds)
   }
+
+  /** `kcoreOf` as a node→deg map, with its round count. */
+  private def peel(edges: Set[(Long, Long)], k: Int): (Map[Long, Int], Int) = {
+    val rounds = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val got = KCore.kcoreOf(edges.toSeq.toDF("u", "v"), k, Some(rounds))
+      .collect().map(r => r.getLong(0) -> r.getLong(1).toInt).toMap
+    (got, rounds.get)
+  }
+
+  private def symmetric(es: Seq[(Long, Long)]): Set[(Long, Long)] =
+    es.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toSet
+
+  /** A path over `n` nodes: with k = 2 each round peels its two ends. */
+  private def path(n: Int): Set[(Long, Long)] =
+    symmetric((0L until n - 1L).map(i => (i, i + 1)))
 
   test("kcore matches serial peeling on a random graph, including a real cascade") {
     val rnd = new scala.util.Random(19)
@@ -30,38 +51,65 @@ class KCoreSpec extends SparkSpec {
     // a pendant chain whose removal must cascade: 100-101-102-103 each
     // hangs off the graph with degree < k once its child is peeled
     val chain = Seq((100L, 101L), (101L, 102L), (102L, 103L), (100L, 0L))
-    val sym = (base ++ chain).flatMap { case (a, b) => Seq((a, b), (b, a)) }
-      .toSet
-    val got = KCore.kcoreOf(sym.toSeq.toDF("u", "v"), 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1).toInt).toMap
-    val want = serialKcore(sym, 3)
+    val sym = symmetric(base ++ chain)
+    val (got, rounds) = peel(sym, 3)
+    val (want, wantRounds) = serialPeel(sym, 3)
     assert(got == want)
+    assert(rounds == wantRounds)
     // the chain is gone (cascaded), and the 3-core is nonempty
     assert(!got.contains(101L) && !got.contains(102L) && !got.contains(103L))
     assert(got.nonEmpty)
   }
 
-  test("cutLineageReleasable frees the checkpoint's storage blocks; frame readable before release") {
-    // the contract the k-core peel leans on (r12 verdict item 4): the
-    // returned frame reads fine while un-released, release() drops the
-    // checkpointed RDD's blocks from the block manager (so a long peel
-    // loop carries O(current round) storage, not O(iterations))
+  test("a path peels two ends per round, as many rounds as a serial peel") {
+    val (got, rounds) = peel(path(24), 2)
+    assert(got.isEmpty)
+    assert(rounds == serialPeel(path(24), 2)._2 && rounds == 12)
+  }
+
+  test("an empty edge set peels to an empty core in no rounds") {
+    assert(peel(Set.empty, 3) == ((Map.empty, 0)))
+  }
+
+  test("k above every degree empties the core in one round") {
+    assert(peel(path(24), 3) == ((Map.empty, 1)))
+  }
+
+  test("result schema: long node and deg, node as nullable as the input's u") {
+    val df = path(4).toSeq.toDF("u", "v")
+    for (in <- Seq(df, df.select(when(col("u") >= 0, col("u")).as("u"), col("v")))) {
+      val nullable = in.schema("u").nullable
+      assert(KCore.kcoreOf(in, 2).schema ==
+        StructType(Seq(StructField("node", LongType, nullable),
+          StructField("deg", LongType, nullable = false))), s"nullable u: $nullable")
+    }
+  }
+
+  test("every job of a peel is described graft:kcore/index or graft:kcore/batch-<n>") {
+    val rounds = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val (core, descs) = describedJobs(
+      KCore.kcoreOf(path(8).toSeq.toDF("u", "v"), 2, Some(rounds)))
+    assert(core.isEmpty && rounds.get == 4)
+    assert(descs.count(_ == "graft:kcore/index") == 1, descs)
+    assert(descs.count(_.startsWith("graft:kcore/batch-")) == rounds.get, descs)
+    assert(descs.forall(d => d == "graft:kcore/index" ||
+      d.matches("graft:kcore/batch-[1-9][0-9]*")), descs)
+  }
+
+  test("a peel's storage does not grow with its round count") {
+    // each batch releases its predecessor's state, so what a collected
+    // peel leaves persisted is the same on 2 rounds as on 12
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.size
-    val (df, release) = graft.core.Iterative.cutLineageReleasable(
-      spark.range(0, 1000, 1, 4).toDF("id"))
-    assert(df.count() == 1000L) // readable while un-released
-    assert(sc.getPersistentRDDs.size > before,
-      "localCheckpoint should register a persisted RDD")
-    release()
-    assert(sc.getPersistentRDDs.size == before,
-      "release() must drop the checkpointed blocks")
-    // r13-advice misuse guard: double release is a no-op (the released
-    // state is also renamed on release, so a post-release read's
-    // 'block rdd_N_* not found' failure points at the contract — see
-    // Iterative.cutLineageReleasable)
-    release()
-    assert(sc.getPersistentRDDs.size == before)
+    def retained(n: Int): (Int, Int) = {
+      val mark = sc.emptyRDD[Int].id
+      val (got, rounds) = peel(path(n), 2)
+      assert(got.isEmpty)
+      (sc.getPersistentRDDs.keys.count(_ > mark), rounds)
+    }
+    val (short, r2) = retained(4)
+    val (long, r12) = retained(24)
+    assert(r2 == 2 && r12 == 12)
+    assert(short == long && short <= 2, s"persisted RDDs: $short vs $long")
   }
 
   test("catalog graph converges well inside the oracle's unrolled bound") {

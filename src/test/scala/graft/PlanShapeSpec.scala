@@ -449,8 +449,9 @@ class PlanShapeSpec extends SparkSpec {
     // r14 verdict item 2 (the claim that the cataloged entry takes the
     // local-solve cutover was stale — it has called distributedSssp
     // since cba55cf): pin it. The distributed path's final dist frame
-    // is a cutLineage'd LogicalRDD; the local Dijkstra path would be a
-    // driver-collected LocalRelation / LocalTableScan instead.
+    // is the superstep engine's LogicalRDD over its state maps; the local
+    // Dijkstra path would be a driver-collected LocalRelation /
+    // LocalTableScan instead.
     val df = q("sssp_synthetic")
     val analyzed = df.queryExecution.analyzed.toString
     assert(analyzed.contains("LogicalRDD"),

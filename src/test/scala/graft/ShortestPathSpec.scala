@@ -1,10 +1,8 @@
 package graft
 
 import graft.apps.ShortestPath
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /** SSSP parity with the serial Dijkstra oracle — the reference's own
@@ -99,42 +97,20 @@ class ShortestPathSpec extends SparkSpec {
   }
 
   test("every job of a solve is described graft:sssp/index or graft:sssp/batch-<n>") {
-    val sc = spark.sparkContext
-    val group = "sssp-job-descriptions"
-    val seen = new java.util.concurrent.ConcurrentHashMap[Int, (String, String)]
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val p = j.properties
-        seen.put(j.jobId, (Option(p.getProperty("spark.jobGroup.id")).getOrElse(""),
-          Option(p.getProperty("spark.job.description")).getOrElse("")))
-      }
+    val es = undirected(randomGraphs.head)
+    val edges = es.toDF("src", "dst", "weight")
+    val (dist, descs) = describedJobs {
+      val d = ShortestPath.distributedSssp(edges, 0L)
+      assert(spark.sparkContext.getLocalProperty("spark.job.description") == "caller",
+        "the caller's job description must be restored")
+      d
     }
-    sc.addSparkListener(listener)
-    try {
-      val es = undirected(randomGraphs.head)
-      val edges = es.toDF("src", "dst", "weight")
-      sc.setJobGroup(group, "caller")
-      val dist = try {
-        val d = ShortestPath.distributedSssp(edges, 0L)
-        assert(sc.getLocalProperty("spark.job.description") == "caller",
-          "the caller's job description must be restored")
-        d
-      } finally sc.clearJobGroup()
-      assert(dist.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap ==
-        ShortestPath.dijkstra(es, 0L))
-      // events arrive in order: once the sentinel's start is seen, so is
-      // every job the solve started
-      sc.setJobGroup("sssp-sentinel", "sentinel")
-      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.values.asScala.exists(_._1 == "sssp-sentinel") &&
-          System.nanoTime() < deadline) Thread.sleep(20)
-      val descs = seen.values.asScala.filter(_._1 == group).map(_._2).toSeq
-      assert(descs.count(_ == "graft:sssp/index") == 1, descs)
-      assert(descs.count(_.startsWith("graft:sssp/batch-")) >= 2, descs)
-      assert(descs.forall(d => d == "graft:sssp/index" ||
-        d.matches("graft:sssp/batch-[1-9][0-9]*")), descs)
-    } finally sc.removeSparkListener(listener)
+    assert(dist.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap ==
+      ShortestPath.dijkstra(es, 0L))
+    assert(descs.count(_ == "graft:sssp/index") == 1, descs)
+    assert(descs.count(_.startsWith("graft:sssp/batch-")) >= 2, descs)
+    assert(descs.forall(d => d == "graft:sssp/index" ||
+      d.matches("graft:sssp/batch-[1-9][0-9]*")), descs)
   }
 
   test("synthetic graph sssp reaches all nodes") {

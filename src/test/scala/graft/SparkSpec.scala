@@ -2,9 +2,11 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.util.Comparator
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession for ScalaTest suites. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -35,6 +37,35 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Runs `body` under a job group of its own with the job description
+    * "caller", and returns its result with the description of every Spark
+    * job it started. */
+  def describedJobs[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val group = s"described-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.ConcurrentHashMap[Int, (String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val p = j.properties
+        seen.put(j.jobId, (Option(p.getProperty("spark.jobGroup.id")).getOrElse(""),
+          Option(p.getProperty("spark.job.description")).getOrElse("")))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "caller")
+      val result = try body finally sc.clearJobGroup()
+      // events arrive in order: once the sentinel's start is seen, so is
+      // every job the body started
+      sc.setJobGroup(s"$group-sentinel", "sentinel")
+      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.values.asScala.exists(_._1 == s"$group-sentinel") &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      (result, seen.values.asScala.filter(_._1 == group).map(_._2).toSeq)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Asserts that catalog entry `name` at scale `scale` gives the same
